@@ -1621,7 +1621,7 @@ def dedup_exact(spark, sf_dir):
     min-doc_id-per-md5) and the exchange carries one (32-char fp,
     long) pair per distinct text per map partition instead of one
     full-text struct. Interleaved min-of-3 with BOTH plans rebuilt
-    per repetition (tools/r15_form_ab.py — rebuilt per rep because
+    per repetition (OPTIMIZATION_r15.md "Measurement trap" — rebuilt per rep because
     under AQE a re-executed action on one DataFrame object reuses its
     materialized stages and times only the tail): sf10 0.605→0.400 s
     (0.66x), sf1 0.084→0.048 s (0.57x), sf0.1 1.04x (floor-dominated)
@@ -3279,7 +3279,7 @@ def vec_knn_explode_kernel(spark, sf_dir):
     what kernel='auto' resolves to above the size gate since r12
     (steady-state tie with the Arrow kernel at sf10 with ~half the
     contention degradation and no Python worker, bit-identical
-    scores — tools/vec_jvm_ab.py, PERFORMANCE.md), but auto resolves
+    scores — PERFORMANCE.md Round-12 explode kernel), but auto resolves
     to the HOF form at the
     driver's sf0.01 gate scale, so without this entry the scale
     kernel would never earn a driver oracle row. Distinct parameters
@@ -4496,7 +4496,7 @@ def agg_approx_sketches(spark, sf_dir):
     weighted formula (v_floor*(ceil-pos) + v_ceil*(pos-floor)). Only
     distinct (flag, price) rows ever shuffle. Interleaved
     per-rep-rebuilt A/B at sf10: 39.6 -> 12.0 s (0.30x), identical
-    output (tools/r16_form_ab.py sketches_hist)."""
+    output (OPTIMIZATION_r16.md §4)."""
     li = _t(spark, sf_dir, "lineitem")
     # Exact distinct via two-level aggregation, NOT countDistinct in
     # the same agg as the sketches: mixing a distinct aggregate with

@@ -85,8 +85,8 @@ def scratch_dir(input_bytes: int) -> str | None:
     tmpfs when one exists with ample headroom. /tmp on this host is a
     journaled root disk; moving shuffle files to /dev/shm measured
     -12% over the sf1 shuffle-heavy subset in two interleaved
-    knob_ab.py windows (-11.7/-12.1; window_rank -34%, cdc_snapshot
-    -23%, dedup_exact -15%), while shuffle-compression-off on top
+    windows (PERFORMANCE.md Round-9; -11.7/-12.1; window_rank -34%,
+    cdc_snapshot -23%, dedup_exact -15%), while shuffle-compression-off on top
     added nothing (lz4 is cheaper than the bytes it saves). Gated on
     free tmpfs >= 8x the input so shuffle+spill can never fill RAM:
     at real scale the gate fails closed and a cluster deploy points
@@ -327,11 +327,16 @@ def _measure_pair(spark, sf_dir, con, oracles, queries, names, iters, errors, ta
 
 def _timed_sweep(spark, sf_dir, errors, tag=""):
     """The end-to-end CDC sweep (the reference's entire tick:
-    watermark -> delta -> serialize -> chunk -> keyed upsert ->
-    commit), timed against a throwaway store. The reference processes
-    this single-threaded with per-10-doc model calls; this is the
-    direct throughput comparison point. Returns (seconds, rows) or
-    (None, 0)."""
+    watermark -> delta -> serialize -> chunk -> embed -> vector
+    upsert -> commit), timed against a throwaway store. The reference
+    processes this single-threaded with per-10-doc model calls; this
+    is the direct throughput comparison point. Returns (seconds, rows)
+    or (None, 0).
+
+    Since the sweep commits through ``VectorStore.upsert``, the
+    resulting ``cdc_sweep_rows_per_sec`` includes the embed step and
+    the vector upsert; BENCH_r16 and earlier timed a sweep that stored
+    no vectors, so their figures are not comparable."""
     import shutil
     import tempfile
 

@@ -97,18 +97,25 @@ def cosine_sim_precomputed_norms(a: Column, b: Column, na: Column, nb: Column) -
 
 
 def _stack(v):
-    """pandas Series of float arrays -> (float64 matrix, null mask)."""
+    """pandas Series of float arrays -> (float64 matrix, null mask).
+    NULL and empty vectors become zero rows of the batch's width, so an
+    empty vector scores the same whether or not its Arrow batch also
+    holds full-width vectors."""
     import numpy as np
 
     mask = v.isna().to_numpy()
-    if mask.any():
-        dim = len(v[~mask].iloc[0]) if (~mask).any() else 0
-        rows = [
-            (np.zeros(dim, dtype=np.float64) if m else np.asarray(x, dtype=np.float64))
-            for m, x in zip(mask, v.to_numpy())
-        ]
-        return (np.vstack(rows) if rows else np.empty((0, dim))), mask
-    return np.vstack(v.to_numpy()).astype(np.float64, copy=False), mask
+    vals = v.to_numpy()
+    if not mask.any():
+        try:
+            return np.vstack(vals).astype(np.float64, copy=False), mask
+        except ValueError:
+            pass  # ragged batch: empty vectors among full-width ones
+    dim = max((len(x) for m, x in zip(mask, vals) if not m), default=0)
+    rows = [
+        np.asarray(x, dtype=np.float64) if not m and len(x) else np.zeros(dim, dtype=np.float64)
+        for m, x in zip(mask, vals)
+    ]
+    return (np.vstack(rows) if rows else np.empty((0, dim))), mask
 
 
 def _masked_series(values, mask):
@@ -188,7 +195,7 @@ def cosine_scores_arrow(vec_col: Column, query_vec) -> Column:
 def cosine_scores_explode(df, id_cols: list[str], vec_col: str, query_vec):
     """Cosine scores to a FIXED query vector with NO Python worker at
     all — the r12 JVM explode shape (third formulation after HOF and
-    the Arrow kernels, tools/vec_jvm_ab.py):
+    the Arrow kernels, PERFORMANCE.md Round-12):
 
         posexplode(vec) -> val * element_at(<query literal>, pos+1)
         -> hash-agg SUM(dot), SUM(sq) per id -> score
@@ -218,7 +225,8 @@ def cosine_scores_explode(df, id_cols: list[str], vec_col: str, query_vec):
     guarantee: under memory pressure HashAggregateExec can spill
     mid-group or fall back to sort-based aggregation, and a group's
     sum then merges partial chunks whose fold order is not the strict
-    sequential one. The raw-equality gate in tools/vec_jvm_ab.py is a
+    sequential one. A raw-equality check against the Arrow kernel
+    (test_explode_kernel_bit_matches_and_stays_jvm_side) is a
     REQUIRED pre-check whenever fixture scale or executor memory
     changes; the 6-dp rounding in the registry queries absorbs ulp
     drift, but the internal raw-equal tests do not.
@@ -383,7 +391,7 @@ def lsh_bucket_arrow(vec_col: Column, planes) -> Column:
     1 iff vec . plane_b >= 0). ``planes`` is a list of plane vectors
     (bit order = list order); NULL vectors map to NULL buckets.
 
-    r14 (tools/lsh_decomp.py): all plane dots in ONE fused sequential
+    r14 (PERFORMANCE.md Round-14): all plane dots in ONE fused sequential
     fold — one transposed batch copy + one dim-loop updating an
     (n x n_planes) accumulator, instead of a ``_fold_dot`` call (each
     with its own full-batch transpose copy) per plane. Column b's

@@ -103,7 +103,7 @@ def extract_features_arrow(media_df: DataFrame) -> DataFrame:
     memoryview (``arr.value(i).as_buffer()``), which Pillow/ffmpeg
     accept directly. The pandas form stays as the reference
     implementation; this is the measured scale path (A/B in
-    tools/mm_decomp.py)."""
+    PERFORMANCE.md Round-13 mm_binary_features)."""
 
     pre = media_df.select(
         "id",

@@ -304,7 +304,7 @@ def repetition_ratio(df: DataFrame, id_col: str, text_col: str, n: int = 2) -> D
     a grouped count plus a second per-id aggregate — two exchanges
     whose payload was the gram STRINGS; interleaved per-rep-rebuilt
     A/B at sf10: 31.6 -> 26.0 s (0.82x), identical 500k rows
-    (tools/r16_form_ab.py repetition_rowlocal). At sf0.1 the per-row
+    (OPTIMIZATION_r16.md §3). At sf0.1 the per-row
     interpreted element ops read 1.13x — the win is the removed
     at-scale shuffle, not small-frame CPU.
 

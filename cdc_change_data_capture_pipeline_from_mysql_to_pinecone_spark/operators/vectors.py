@@ -42,7 +42,7 @@ def _resolve_kernel(df: DataFrame, kernel: str, scale_kernel: str = "arrow") -> 
     the contention degradation, no Python worker — PERFORMANCE.md),
     LSH bucketing keeps the Arrow matmul (the 13-sum explode agg
     measured 24-59% WORSE at sf10 — one matmul beats thirteen
-    grouped sums; tools/vec_jvm_ab.py)."""
+    grouped sums; PERFORMANCE.md Round-12 explode kernel)."""
     if kernel != "auto":
         return kernel
     size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
@@ -60,7 +60,7 @@ def cosine_topk(
     """Exact top-k by cosine similarity to a literal query vector.
 
     Kernels (all produce bit-identical scores — same sequential fold;
-    verified raw-equal at sf0.1/sf1/sf10, tools/vec_jvm_ab.py):
+    verified raw-equal at sf0.1/sf1/sf10, PERFORMANCE.md Round-12):
 
     - ``'explode'`` (the scale default since r12): pure-JVM
       posexplode + literal-lookup products + hash-agg sums — no

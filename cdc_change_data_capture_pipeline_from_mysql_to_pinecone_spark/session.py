@@ -86,7 +86,7 @@ def get_spark(
 #: that subset); the mapInPandas-family queries prefer Spark's default
 #: 10000 — smaller batches pipeline the Python worker with the scan.
 #: Landed only where the win was >=10% in EVERY window of the r15
-#: three-window fresh-process A/B at sf10 (tools/mrb_sweep.py):
+#: three-window fresh-process A/B at sf10 (PERFORMANCE.md Round-15):
 #: mm_resize_plan 10.9-17.9%, embed_documents 5.2-15.8%. The queries
 #: apply these themselves via :func:`conf_pinned_session`, so every
 #: caller of ``queries()`` executes the same plan the bench measured.
@@ -114,8 +114,10 @@ def conf_pinned_session(spark: SparkSession, overrides: dict[str, str]) -> Spark
     :func:`session_cache`, and the parent's explicitly-set confs are
     re-synced on every call (``SET`` — driver-local, no job) so
     harness-side regime changes (AQE/shuffle/broadcast re-sizing
-    between scale blocks) stay visible. Note the interaction with the
-    entry registry's plan memo (``__spark_entry__._q``): a query's
+    between scale blocks) stay visible; a key synced on an earlier
+    call that has since been unset on the parent is unset in the
+    child too, so it falls back to its default. Note the interaction
+    with the entry registry's plan memo (``__spark_entry__._q``): a query's
     build function — and therefore this sync — runs once per
     (parent session, sf_dir), so parent conf changes propagate on the
     first build per scale block, which is exactly when the bench sets
@@ -129,25 +131,28 @@ def conf_pinned_session(spark: SparkSession, overrides: dict[str, str]) -> Spark
         return spark
     key = tuple(sorted(overrides.items()))
     cache = session_cache(spark, "conf_pinned_sessions")
-    child = cache.get(key)
-    if child is None:
+    entry = cache.get(key)
+    if entry is None:
         try:
-            child = spark.newSession()
+            entry = (spark.newSession(), set())
         except Exception:
             return spark
-        cache[key] = child
+        cache[key] = entry
+    child, synced = entry
     try:
-        rows = spark.sql("SET").collect()
+        parent = {r[0]: r[1] for r in spark.sql("SET").collect() if r[0] not in overrides}
     except Exception:
-        rows = []
-    for row in rows:
-        k, v = row[0], row[1]
-        if k in overrides:
-            continue
-        try:
-            child.conf.set(k, v)
-        except Exception:
-            pass  # static conf — process-wide, already in effect
+        parent = None  # keep the last sync
+    if parent is not None:
+        for k in synced - parent.keys():
+            child.conf.unset(k)
+        synced.clear()
+        for k, v in parent.items():
+            try:
+                child.conf.set(k, v)
+                synced.add(k)
+            except Exception:
+                pass  # static conf — process-wide, already in effect
     for k, v in overrides.items():
         try:
             child.conf.set(k, v)

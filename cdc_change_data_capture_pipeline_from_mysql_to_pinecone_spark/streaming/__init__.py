@@ -1,3 +1,3 @@
-from .pipeline import cdc_tick, embed_text, run_streaming_pipeline
+from .pipeline import cdc_tick, commit_tick, embed_text
 
-__all__ = ["cdc_tick", "embed_text", "run_streaming_pipeline"]
+__all__ = ["cdc_tick", "commit_tick", "embed_text"]

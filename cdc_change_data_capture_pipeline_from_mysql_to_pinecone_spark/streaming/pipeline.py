@@ -11,12 +11,18 @@ Here the same dataflow is:
 - ``cdc_tick``  — one micro-batch as a pure DataFrame DAG with
   deterministic chunk ids, so replays are idempotent (exactly-once
   effect on the sink given last-writer-wins upsert);
-- ``run_streaming_pipeline`` — the poll loop as Structured Streaming:
-  file source + ``foreachBatch`` sink + processing-time trigger
-  (trigger interval ≙ ``time.sleep(300)``, controller.py:35); offset
-  tracking is the built-in checkpoint, replacing the hand-rolled
-  watermark table (service.py:21-46) which remains available for
-  batch-mode parity;
+- ``commit_tick`` — the ONE commit path: the tick's ``id``/``values``/
+  ``metadata`` rows go through ``sources.vector_store.VectorStore.
+  upsert`` (keyed, last-call-wins), then the watermark row is
+  committed. Idempotent sink + deterministic ids + a replayable source
+  is the Structured Streaming exactly-once recipe;
+- ``sweep`` — the poll loop as batch ticks over every tracked table
+  (the hand-rolled watermark table, service.py:21-46);
+- ``run_multi_table_streaming`` — the poll loop as Structured
+  Streaming: one file-source query per table, ``foreachBatch`` into
+  ``commit_tick``, processing-time trigger (≙ ``time.sleep(300)``,
+  controller.py:35); offsets live in the query's checkpoint. Both
+  modes write the same store, so they are interchangeable;
 - ``embed_text`` — the embedding UDF (≙ utils/embeddings_utils.py:3-8,
   ``model.encode`` on a batch of texts). Arrow-batched pandas_udf:
   the model loads once per executor process (reference re-wraps it per
@@ -28,13 +34,22 @@ Here the same dataflow is:
 
 from __future__ import annotations
 
+import datetime as _dt
+import logging
+import os
+from concurrent.futures import ThreadPoolExecutor
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators import cdc
+from ..sources._commit import table_lock
+from ..sources.sinks import recover_table, upsert_parquet
+from ..sources.tables import _nanos_ts_columns, load_table
+from ..sources.vector_store import VectorStore
 
 EMBED_DIM = 384  # ≙ service_layer/service.py:90, utils/config.py:11
 
@@ -127,38 +142,75 @@ def cdc_tick(
     return sink_rows, new_wm
 
 
+def commit_tick(
+    spark: SparkSession,
+    store: VectorStore,
+    wm_path: str,
+    table: str,
+    sink_rows: DataFrame,
+    wm_row: Row,
+) -> int:
+    """Commit one CDC tick — the ONE commit path :func:`sweep` and
+    :func:`run_multi_table_streaming` share. Returns rows committed.
+
+    ``sink_rows`` (``id``, ``values``, ``metadata``, as ``cdc_tick``
+    emits them) go through ``store.upsert`` (keyed MERGE, last call
+    wins, serialized by the store's writer lock); then ``wm_row``
+    (``last_updated``, ``batch_rows``) is committed to the keyed
+    watermark table at ``wm_path`` under its own writer lock. Both
+    locks are ``flock``s, so concurrent tables (threads or streaming
+    queries) need no in-process lock. An idle tick (0 rows) touches
+    nothing.
+
+    Vectors first, watermark second: a crash between the two replays
+    the delta next tick, and deterministic chunk ids make the replay
+    rewrite identical rows (the reference would duplicate them,
+    SURVEY §2.9 T3)."""
+    n = wm_row["batch_rows"]
+    if n == 0:
+        return 0
+    store.upsert(sink_rows)
+    lu = wm_row["last_updated"]
+    if isinstance(lu, _dt.date) and not isinstance(lu, _dt.datetime):
+        # date-typed change columns (o_orderdate) widen to midnight
+        # timestamps in the shared watermark table
+        lu = _dt.datetime(lu.year, lu.month, lu.day)
+    update = spark.createDataFrame(
+        [(table, lu, n)], "table_name string, last_updated timestamp, batch_rows long"
+    ).withColumn("version", F.unix_micros("last_updated"))
+    with table_lock(wm_path):
+        upsert_parquet(spark, wm_path, update, ["table_name"], "version")
+    return n
+
+
 def sweep(
     spark: SparkSession,
     sf_dir: str,
     store_dir: str,
     tables: dict[str, tuple[str, str]],
     *,
-    with_embeddings: bool = False,
     max_parallel_tables: int = 1,
     on_error: str = "raise",
-    chunk_size: int = cdc.CHUNK_SIZE,
-    target_bucket_rows: int | None = None,
 ) -> dict[str, int]:
     """One full CDC sweep — the reference's scheduler tick end-to-end
     (controller.py:17-35): for each tracked table, read its stored
-    watermark, process the delta (serialize -> chunk -> [embed]),
-    upsert the vector rows, then commit the new watermark. Returns
+    watermark, run ``cdc_tick`` (serialize -> chunk -> embed) over the
+    delta, and :func:`commit_tick` the result. Returns
     {table: rows_processed}.
 
     ``tables`` maps table name -> (change_col, order_col). State lives
-    under ``store_dir``: a keyed ``watermark`` table and a keyed
-    ``vectors`` table, both maintained with last-writer-wins MERGE
-    (sources.sinks.upsert_parquet). Deterministic chunk ids make the
-    whole sweep replay-idempotent — crash after vector upsert but
-    before watermark commit reprocesses the delta into identical sink
-    rows (the reference would duplicate, SURVEY §2.9 T3).
+    under ``store_dir``: a ``VectorStore`` at ``vectors`` (chunk id ->
+    384-dim ``values`` + ``metadata`` {source, id, text}, queryable
+    with ``VectorStore.query``) and a keyed ``watermark`` table.
+    Deterministic chunk ids make the whole sweep replay-idempotent —
+    a crash after the vector upsert but before the watermark commit
+    reprocesses the delta into identical rows.
 
     ``max_parallel_tables`` > 1 processes tables concurrently (the
     reference loops serially, controller.py:25-27): each table's
     read+serialize+chunk+embed DAG runs as parallel Spark jobs from a
-    thread pool, while the two store commits stay serialized under a
-    lock (they read-modify-write shared directories). Safe because the
-    per-table dataflows are independent until the commit.
+    thread pool; the commits serialize on the store's and the
+    watermark table's writer locks.
 
     ``on_error='continue'`` reproduces the reference's per-tick fault
     isolation (errors logged, tick abandoned for that table only,
@@ -167,117 +219,47 @@ def sweep(
     retries exactly the same delta), and every other table completes.
     Default 'raise' fails fast — right for tests and batch jobs.
     """
-    import os
-    import threading
-    from concurrent.futures import ThreadPoolExecutor
-
-    from ..sources.sinks import recover_table, upsert_parquet, upsert_parquet_partitioned
-    from ..sources.tables import load_table
-
     wm_path = os.path.join(store_dir, "watermark")
-    vec_path = os.path.join(store_dir, "vectors")
-    # sink-open recovery: promote any crash-stranded aside dirs back to
-    # their committed state before reading watermarks (idempotent)
+    store = VectorStore(spark, os.path.join(store_dir, "vectors"), EMBED_DIM)
+    # sink-open recovery: promote a crash-stranded aside dir back to
+    # its committed state before reading watermarks (idempotent)
     recover_table(wm_path)
-    recover_table(vec_path)
     # Collect watermarks eagerly: the commits below replace the
     # watermark directory, so a lazily-read wm_df would capture a file
     # listing that points at deleted part files (FAILED_READ_FILE on
     # the second delta-bearing table).
+    wm = {}
     if os.path.exists(wm_path):
-        wm = {
-            r["table_name"]: r["last_updated"]
-            for r in spark.read.parquet(wm_path).select("table_name", "last_updated").collect()
-        }
-    else:
-        wm = {}
-    processed: dict[str, int] = {}
-    store_lock = threading.Lock()
+        rows = spark.read.parquet(wm_path).select("table_name", "last_updated").collect()
+        wm = {r["table_name"]: r["last_updated"] for r in rows}
 
-    def process_table(item: tuple[str, tuple[str, str]]) -> tuple[str, int]:
-        if on_error == "continue":
-            try:
-                return _process_table_inner(item)
-            except Exception as exc:
-                import logging
-
-                logging.getLogger(__name__).warning(
-                    "sweep: table %s failed, watermark not advanced: %s", item[0], exc
-                )
-                return item[0], -1
-        return _process_table_inner(item)
-
-    def _process_table_inner(item: tuple[str, tuple[str, str]]) -> tuple[str, int]:
-        table, (change_col, order_col) = item
-        watermark = wm.get(table, "1970-01-01")
-        df = load_table(spark, sf_dir, table)
+    def tick(table: str) -> int:
+        change_col, order_col = tables[table]
         sink_rows, new_wm = cdc_tick(
-            df,
+            load_table(spark, sf_dir, table),
             source=table,
             change_col=change_col,
             order_col=order_col,
-            watermark=watermark,
-            chunk_size=chunk_size,
-            with_embeddings=with_embeddings,
+            watermark=wm.get(table, "1970-01-01"),
+            with_embeddings=True,
         )
-        wm_row = new_wm.collect()[0]
-        if wm_row["batch_rows"] == 0:
-            return table, 0
+        return commit_tick(spark, store, wm_path, table, sink_rows, new_wm.collect()[0])
 
-        vec_updates = sink_rows.select(
-            "id",
-            F.col("metadata.text").alias("text"),
-            F.lit(table).alias("source"),
-            F.unix_micros(F.lit(wm_row["last_updated"])).alias("version"),
-        )
-        # Persist the micro-batch across the MERGE (r8): the keyed
-        # upsert executes its input TWICE — once to discover the
-        # touched buckets, once for the partitioned write — and
-        # without a persist each execution re-runs the whole
-        # scan -> serialize -> chunk window DAG (measured: the sweep
-        # spent ~2x the tick DAG's cost re-deriving it). A micro-batch
-        # is bounded by the tick, so MEMORY_AND_DISK is safe at any
-        # scale (spills, never OOMs), and the cache dies with the
-        # commit either way.
-        from pyspark import StorageLevel
-
-        vec_updates = vec_updates.persist(StorageLevel.MEMORY_AND_DISK)
+    def guarded(table: str) -> int:
         try:
-            with store_lock:
-                # vectors grow with the corpus: hash-bucketed layout so
-                # each micro-batch rewrites only the buckets it touches
-                # (O(batch), not O(table); the plain upsert stays for
-                # the tiny watermark)
-                upsert_parquet_partitioned(
-                    spark,
-                    vec_path,
-                    vec_updates,
-                    ["id"],
-                    "version",
-                    **(
-                        {"target_bucket_rows": target_bucket_rows}
-                        if target_bucket_rows is not None
-                        else {}
-                    ),
-                )
-                wm_update = spark.createDataFrame(
-                    [(table, wm_row["last_updated"], wm_row["batch_rows"])],
-                    "table_name string, last_updated timestamp, batch_rows long",
-                ).withColumn("version", F.unix_micros("last_updated"))
-                upsert_parquet(spark, wm_path, wm_update, ["table_name"], "version")
-        finally:
-            vec_updates.unpersist()
-        return table, wm_row["batch_rows"]
+            return tick(table)
+        except Exception as exc:
+            if on_error != "continue":
+                raise
+            logging.getLogger(__name__).warning(
+                "sweep: table %s failed, watermark not advanced: %s", table, exc
+            )
+            return -1
 
     if max_parallel_tables > 1:
         with ThreadPoolExecutor(max_workers=max_parallel_tables) as pool:
-            for table, n in pool.map(process_table, tables.items()):
-                processed[table] = n
-    else:
-        for item in tables.items():
-            table, n = process_table(item)
-            processed[table] = n
-    return processed
+            return dict(zip(tables, pool.map(guarded, tables)))
+    return {table: guarded(table) for table in tables}
 
 
 def run_multi_table_streaming(
@@ -286,7 +268,6 @@ def run_multi_table_streaming(
     store_dir: str,
     tables: dict[str, tuple[str, str]],
     *,
-    with_embeddings: bool = False,
     trigger_seconds: int = 300,
     available_now: bool = True,
     await_seconds: int = 120,
@@ -303,28 +284,23 @@ def run_multi_table_streaming(
     concurrently on the shared executors.
 
     Every micro-batch runs the same ``cdc_tick`` DAG the batch ``sweep``
-    uses and commits into the same keyed store (hash-bucketed
-    ``vectors``, last-writer-wins ``watermark``), so batch and
-    streaming modes are interchangeable over one store. Store commits
-    serialize under a lock (read-modify-write of shared directories);
-    everything upstream of the commit is independent per table.
+    uses and commits through the same :func:`commit_tick` into the
+    same store, so batch and streaming modes are interchangeable over
+    one store. File source: ``<table>*.parquet`` under ``sf_dir``
+    (FileStreamSource needs a directory basePath); parquet
+    TIMESTAMP(NANOS) columns are read as raw int64 and converted per
+    batch (Spark 4 rejects the physical type; see sources.tables).
 
+    ``available_now=False`` runs the reference's operating mode: a
+    processing-time trigger firing every ``trigger_seconds``.
     ``block=False`` returns the started queries immediately — callers
     (tests, service managers) poll the store and stop them.
     """
-    import datetime as _dt
-    import os
-    import threading
-
-    from ..sources.sinks import recover_table, upsert_parquet, upsert_parquet_partitioned
-    from ..sources.tables import _nanos_ts_columns
-
     wm_path = os.path.join(store_dir, "watermark")
-    vec_path = os.path.join(store_dir, "vectors")
+    store = VectorStore(spark, os.path.join(store_dir, "vectors"), EMBED_DIM)
     recover_table(wm_path)
-    recover_table(vec_path)
+    # keep tz-naive parquet timestamps as TimestampType (see sources.tables)
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    lock = threading.Lock()
 
     def make_process(table: str, change_col: str, order_col: str, ns_cols: list[str]):
         def process(batch_df: DataFrame, epoch_id: int) -> None:
@@ -340,39 +316,9 @@ def run_multi_table_streaming(
                 change_col=change_col,
                 order_col=order_col,
                 watermark="1970-01-01",
-                with_embeddings=with_embeddings,
+                with_embeddings=True,
             )
-            wm_row = new_wm.collect()[0]
-            if wm_row["batch_rows"] == 0:
-                return
-            lu = wm_row["last_updated"]
-            if isinstance(lu, _dt.date) and not isinstance(lu, _dt.datetime):
-                # date-typed change columns (o_orderdate) widen to
-                # midnight timestamps in the shared watermark table
-                lu = _dt.datetime(lu.year, lu.month, lu.day)
-            vec_updates = sink_rows.select(
-                "id",
-                F.col("metadata.text").alias("text"),
-                F.lit(table).alias("source"),
-                F.unix_micros(F.lit(lu)).alias("version"),
-            )
-            # persist the bounded micro-batch across the MERGE's two
-            # executions (same fix + rationale as sweep, r8)
-            from pyspark import StorageLevel
-
-            vec_updates = vec_updates.persist(StorageLevel.MEMORY_AND_DISK)
-            try:
-                with lock:
-                    upsert_parquet_partitioned(
-                        spark, vec_path, vec_updates, ["id"], "version"
-                    )
-                    wm_update = spark.createDataFrame(
-                        [(table, lu, wm_row["batch_rows"])],
-                        "table_name string, last_updated timestamp, batch_rows long",
-                    ).withColumn("version", F.unix_micros("last_updated"))
-                    upsert_parquet(spark, wm_path, wm_update, ["table_name"], "version")
-            finally:
-                vec_updates.unpersist()
+            commit_tick(spark, store, wm_path, table, sink_rows, new_wm.collect()[0])
 
         return process
 
@@ -415,85 +361,6 @@ def run_multi_table_streaming(
     return queries
 
 
-def run_streaming_pipeline(
-    spark: SparkSession,
-    sf_dir: str,
-    table: str,
-    *,
-    source: str,
-    order_col: str,
-    sink: list,
-    trigger_seconds: int = 300,
-    available_now: bool = True,
-    max_files_per_trigger: int | None = None,
-    stop_after_batches: int | None = None,
-    await_seconds: int = 120,
-) -> None:
-    """Structured-Streaming form of the poll loop (T1/T2).
-
-    File source (directory + glob — FileStreamSource requires a
-    directory basePath) -> foreachBatch(cdc_tick-shaped transform) ->
-    caller's ``sink`` list. The list sink is the TEST/MEMORY DEMO
-    PATH ONLY: ``process`` collects chunk rows to the driver, which is
-    fine for bounded smoke fixtures but is NOT the production shape —
-    deploys route each micro-batch through the partitioned keyed MERGE
-    (``sweep``'s foreachBatch -> sinks.upsert path), where nothing is
-    driver-materialized. Offset tracking is Spark's checkpoint;
-    trigger_seconds=300 ≙ the reference's sleep(300). Parquet
-    TIMESTAMP(NANOS) columns are read as raw int64 and converted per
-    batch (Spark 4 rejects the physical type; see sources.tables).
-    """
-    import os
-
-    from ..sources.tables import _nanos_ts_columns
-
-    path = os.path.join(sf_dir, f"{table}.parquet")
-    ns_cols = _nanos_ts_columns(path)
-    if ns_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # keep tz-naive parquet timestamps as TimestampType (see sources.tables)
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    raw_schema = spark.read.parquet(path).schema
-    reader = spark.readStream.schema(raw_schema).option(
-        "pathGlobFilter", f"{table}*.parquet"
-    )
-    if max_files_per_trigger:
-        # rate-limit each micro-batch (the poll-loop analogue of the
-        # reference consuming one delta per tick)
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(sf_dir)
-
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        for c in ns_cols:
-            batch_df = batch_df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
-        serialized = cdc.serialize_rows(batch_df)
-        chunks = cdc.chunk_documents(
-            serialized, order_col, "data_string", source,
-            bucket_width=cdc.CHUNK_SIZE * 1000,
-        )
-        sink.append(chunks.select("chunk_id", "document", "n_rows").collect())
-
-    writer = stream.writeStream.foreachBatch(process)
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination(await_seconds)
-    else:
-        # the reference's operating mode: a periodic trigger firing a
-        # micro-batch per interval (controller.py:35's sleep(300) loop)
-        import time as _time
-
-        q = writer.trigger(processingTime=f"{trigger_seconds} seconds").start()
-        try:
-            if stop_after_batches is not None:
-                deadline = _time.monotonic() + await_seconds
-                while _time.monotonic() < deadline and len(sink) < stop_after_batches:
-                    _time.sleep(0.2)
-            else:  # pragma: no cover - unbounded service mode
-                q.awaitTermination(await_seconds)
-        finally:
-            q.stop()
-
-
 def sweep_rollup(
     spark: SparkSession,
     sf_dir: str,
@@ -519,10 +386,7 @@ def sweep_rollup(
     state that double-merges a replayed delta (merge_rollups is not
     replay-idempotent: sums would double). A crash inside the rename
     window itself is repaired by recover_table at the next tick."""
-    import os
-
     from ..operators.incremental import delta_rollup, merge_rollups
-    from ..sources.tables import load_table
 
     return _run_sweep(
         spark,
@@ -546,11 +410,6 @@ def _run_sweep(spark, source_df, state_path, change_col, delta_fn, merge_fn) -> 
     tick, fold the delta with ``delta_fn``, merge into stored state
     with ``merge_fn``, and commit state + watermark in ONE atomic
     rename (_commit_rollup)."""
-    import os
-
-    from ..operators import cdc as cdc_ops
-    from ..sources.sinks import recover_table
-
     recover_table(state_path)
     wm_marker = os.path.join(state_path, "_watermark")
     watermark = None
@@ -563,7 +422,7 @@ def _run_sweep(spark, source_df, state_path, change_col, delta_fn, merge_fn) -> 
     else:
         wm_typed = F.lit(watermark).cast(source_df.schema[change_col].dataType)
         delta = source_df.filter(F.col(change_col) > wm_typed)
-    wm_row = cdc_ops.next_watermark(delta, change_col).collect()[0]
+    wm_row = cdc.next_watermark(delta, change_col).collect()[0]
     if wm_row["batch_rows"] == 0:
         return 0
 
@@ -580,7 +439,6 @@ def _commit_rollup(rollup_path: str, new_state, watermark) -> None:
     """Write state + ``_watermark`` marker to a tmp dir and swap both
     in with ONE atomic rename (the exactly-once pivot both rollup
     sweeps share)."""
-    import os
     import uuid as _uuid
 
     from ..sources.sinks import _swap_in
@@ -619,8 +477,6 @@ def sweep_changelog_rollup(
     images for each measure, and a monotonically increasing
     ``change_col`` (LSN / commit ts). Returns changelog rows folded
     (0 = idle tick, store untouched)."""
-    import os
-
     from ..operators.incremental import changelog_delta_rollup, merge_rollups
 
     return _run_sweep(
@@ -655,8 +511,6 @@ def sweep_topk_rollup(
     lower-bound counts above the true frequencies (the one MG
     guarantee a correct pipeline must keep). State is <= k rows per
     key group forever; returns delta rows folded (0 = idle tick)."""
-    import os
-
     from ..operators.incremental import delta_topk_rollup, merge_topk_rollups
 
     return _run_sweep(
@@ -693,8 +547,6 @@ def sweep_ivf_assign(
     (delete the state dir, re-run), never a tick.
 
     Returns delta rows assigned (0 = idle tick, store untouched)."""
-    import os
-
     from ..operators.incremental import delta_ivf_assign, merge_ivf_assignments
 
     return _run_sweep(

@@ -200,6 +200,27 @@ def test_sized_session_large_regime_policies(spark, tmp_path):
     s.conf.set("spark.sql.shuffle.partitions", "32")
 
 
+def test_conf_pinned_session_drops_confs_unset_on_parent(spark):
+    """A conf synced into the memoized child on one call and unset on
+    the parent before the next must not linger in the child at its
+    stale value (ADVICE r16)."""
+    from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.session import (
+        conf_pinned_session,
+    )
+
+    key = "spark.sql.files.maxRecordsPerFile"
+    pin = {"spark.sql.execution.arrow.maxRecordsPerBatch": "123"}
+    spark.conf.set(key, "77")
+    try:
+        child = conf_pinned_session(spark, pin)
+        assert child.conf.get(key) == "77"
+    finally:
+        spark.conf.unset(key)
+    assert conf_pinned_session(spark, pin) is child  # memoized
+    assert child.conf.get(key) == spark.conf.get(key) == "0"
+    assert child.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch") == "123"
+
+
 def test_q1_decimal_guard_branch_matches_long_branch(spark):
     """The 100 TB wrap guard (r13): past _Q1_DECIMAL_ROW_GATE footer
     rows q1's cents sums switch to DECIMAL(38,0). Both branches must

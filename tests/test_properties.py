@@ -620,6 +620,23 @@ def test_explode_cosine_kernel_bit_matches_hof_fold(spark_g, vecs, dim):
         assert a[k] == x[k], (k, shaped[k], a[k], x[k])  # bit-equal, not approx
 
 
+def test_arrow_stack_pads_empty_vectors_in_a_mixed_batch():
+    """An Arrow batch can hold empty vectors next to full-width ones
+    (which rows share a batch depends on partitioning): the kernels'
+    stacking pads empties, like NULLs, to zero rows of the batch's
+    width instead of failing the whole batch."""
+    import pandas as pd
+
+    from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.functions.vector import (
+        _stack,
+    )
+
+    for batch in ([[], [0.0, 2.0]], [None, [], [0.0, 2.0]]):
+        mat, mask = _stack(pd.Series(batch))
+        assert mat.tolist()[-2:] == [[0.0, 0.0], [0.0, 2.0]]
+        assert mask.tolist() == [x is None for x in batch]
+
+
 def test_alpha_sampling_matches_brute_force_and_limits(spark):
     """alpha_sampling (NEW r15 — XLM-R temperature sampling): exact
     match against a pure-Python recount of the planted fixture, plus

@@ -198,6 +198,7 @@ def test_partitioned_upsert_bucket_sizing(spark, tmp_path):
         upsert_parquet_partitioned,
     )
     from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.sources.sinks import (
+        _read_marker,
         _read_nbuckets,
     )
 
@@ -223,8 +224,14 @@ def test_partitioned_upsert_bucket_sizing(spark, tmp_path):
     n2 = _read_nbuckets(path, "kbucket")
     assert n2 >= 128, n2  # grew
     df = spark.read.parquet(path)
-    assert df.count() == 300  # no rows lost in the rewrite
+    # ids from both merges survive the rewrite, and the marker's row
+    # count with them
+    assert {r["id"] for r in df.select("id").collect()} == {f"id{i}" for i in range(300)}
+    assert _read_marker(path) == (n2, 300)
     assert df.filter(F.col("id") == "id250").first()["score"] == 250.0
+    # the re-bucketed layout is consistent: every row's partition
+    # matches the hash of its key under the new count
+    assert df.filter(F.col("kbucket") != F.pmod(F.hash("id"), F.lit(n2))).count() == 0
     # post-growth merges keep working against the new layout
     upsert_parquet_partitioned(spark, path, mk(0, 1, 9), ["id"], "version")
     assert spark.read.parquet(path).filter(F.col("id") == "id0").first()["version"] == 9

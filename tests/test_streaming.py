@@ -13,21 +13,19 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.sources import load_table  # noqa: E402
 from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.streaming.pipeline import (  # noqa: E402
     cdc_tick,
-    run_streaming_pipeline,
+    run_multi_table_streaming,
 )
 
 
-def test_streaming_pipeline_available_now(spark, sf_dir):
-    sink = []
-    run_streaming_pipeline(
-        spark, sf_dir, "events", source="events", order_col="event_id", sink=sink
-    )
-    assert len(sink) == 1  # one micro-batch (availableNow over one file)
-    chunks = sink[0]
-    assert sum(r["n_rows"] for r in chunks) == 1000
-    ids = sorted(r["chunk_id"] for r in chunks)
-    assert ids[0] == "events#0#0"  # source#bucket#first_key of the first chunk
-    assert all(r["n_rows"] == 100 for r in chunks)
+def test_cdc_tick_chunk_ids(spark, sf_dir):
+    """Chunk ids are ``source#bucket#first_key``: a full tick over the
+    1000 events yields ten 100-row chunks, the first ``events#0#0``,
+    and each chunk's metadata names its source and id."""
+    e = load_table(spark, sf_dir, "events")
+    rows, _wm = cdc_tick(e, source="events", change_col="ts", order_col="event_id", watermark="1970-01-01")
+    got = sorted((r["id"], r["metadata"]["source"], r["metadata"]["id"]) for r in rows.collect())
+    assert [i for i, _s, _m in got] == sorted(f"events#0#{k}" for k in range(0, 1000, 100))
+    assert all(src == "events" and mid == i for i, src, mid in got)
 
 
 def test_cdc_tick_replay_idempotent(spark, sf_dir):
@@ -66,31 +64,43 @@ def test_streaming_processing_time_trigger(spark, sf_dir, tmp_path):
     """The reference's actual operating mode (controller.py:35: poll
     every 300 s): a processingTime trigger must fire multiple
     micro-batches, each advancing the checkpoint offset — here two
-    source files rate-limited to one per trigger produce two batches."""
+    copies of one source file rate-limited to one per trigger commit
+    two 1000-row batches, and the replayed copy rewrites the same ten
+    chunk ids instead of duplicating them."""
     import shutil
+    import time
 
     src = str(tmp_path / "stream_src")
     os.makedirs(src)
     shutil.copy(os.path.join(sf_dir, "events.parquet"), os.path.join(src, "events.parquet"))
     shutil.copy(os.path.join(sf_dir, "events.parquet"), os.path.join(src, "events2.parquet"))
 
-    sink = []
-    run_streaming_pipeline(
+    store = str(tmp_path / "store")
+    queries = run_multi_table_streaming(
         spark,
         src,
-        "events",
-        source="events",
-        order_col="event_id",
-        sink=sink,
-        trigger_seconds=1,
+        store,
+        {"events": ("ts", "event_id")},
         available_now=False,
+        trigger_seconds=1,
         max_files_per_trigger=1,
-        stop_after_batches=2,
-        await_seconds=60,
+        block=False,
     )
-    assert len(sink) >= 2  # one micro-batch per trigger tick per file
-    for batch in sink[:2]:
-        assert sum(r["n_rows"] for r in batch) == 1000  # offsets advanced file-by-file
+    commits_dir = os.path.join(store, "_checkpoint-events", "commits")
+    try:
+        deadline = time.monotonic() + 60
+        commits = []
+        while time.monotonic() < deadline and len(commits) < 2:
+            if os.path.isdir(commits_dir):
+                commits = [f for f in os.listdir(commits_dir) if not f.startswith(".")]
+            time.sleep(0.2)
+    finally:
+        for q in queries:
+            q.stop()
+    assert len(commits) >= 2, commits  # one micro-batch per trigger tick per file
+    wm = spark.read.parquet(os.path.join(store, "watermark")).collect()
+    assert [r["batch_rows"] for r in wm] == [1000]  # offsets advanced file-by-file
+    assert spark.read.parquet(os.path.join(store, "vectors")).count() == 10
 
 
 def test_multi_table_streaming_independent_watermarks(spark, sf_dir, tmp_path):
@@ -100,10 +110,6 @@ def test_multi_table_streaming_independent_watermarks(spark, sf_dir, tmp_path):
     advances independently to ITS OWN max(change_col), and both
     tables' chunks land in the shared vectors store."""
     import time
-
-    from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.streaming.pipeline import (
-        run_multi_table_streaming,
-    )
 
     store = str(tmp_path / "store")
     queries = run_multi_table_streaming(
@@ -139,7 +145,7 @@ def test_multi_table_streaming_independent_watermarks(spark, sf_dir, tmp_path):
     assert wm["events"] == ev_max
     assert wm["orders"] == o_max and wm["events"] != wm["orders"]
     vecs = spark.read.parquet(os.path.join(store, "vectors"))
-    assert {r["source"] for r in vecs.select("source").distinct().collect()} == {
+    assert {r[0] for r in vecs.select("metadata.source").distinct().collect()} == {
         "events",
         "orders",
     }
@@ -148,10 +154,6 @@ def test_multi_table_streaming_independent_watermarks(spark, sf_dir, tmp_path):
 def test_multi_table_streaming_available_now(spark, sf_dir, tmp_path):
     """Catch-up mode (availableNow): one pass over both tables drains
     them, commits each watermark to its own max, then terminates."""
-    from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.streaming.pipeline import (
-        run_multi_table_streaming,
-    )
-
     store = str(tmp_path / "store")
     run_multi_table_streaming(
         spark,
@@ -167,7 +169,7 @@ def test_multi_table_streaming_available_now(spark, sf_dir, tmp_path):
     assert set(wm) == {"events", "orders"}
     assert wm["events"] == load_table(spark, sf_dir, "events").agg(F.max("ts")).collect()[0][0]
     vecs = spark.read.parquet(os.path.join(store, "vectors"))
-    assert vecs.filter(F.col("source") == "events").count() == 10  # 1000 rows / 100-chunk
+    assert vecs.filter(F.col("metadata.source") == "events").count() == 10  # 1000 rows / 100-chunk
 
 
 def test_embed_kernel_fallback_is_hash_featurizer(spark):
@@ -228,10 +230,6 @@ def test_multi_table_streaming_max_files_per_trigger(spark, tmp_path):
     committed micro-batches (the backlog-catchup throttle used by the
     sf0.1 throughput measurement, PERFORMANCE.md r5)."""
     import pandas as pd
-
-    from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.streaming.pipeline import (
-        run_multi_table_streaming,
-    )
 
     src = str(tmp_path / "src")
     os.makedirs(src)

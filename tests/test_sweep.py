@@ -8,11 +8,14 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.sources.vector_store import (  # noqa: E402
+    VectorStore,
+)
 from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.streaming.pipeline import (  # noqa: E402
+    EMBED_DIM,
+    run_multi_table_streaming,
     sweep,
 )
-
-from pyspark.sql import functions as F  # noqa: E402
 
 TABLES = {"events": ("ts", "event_id")}
 
@@ -46,7 +49,7 @@ def test_sweep_multi_table(spark, sf_dir, tmp_path):
     wm = {r["table_name"] for r in spark.read.parquet(os.path.join(store, "watermark")).collect()}
     assert wm == {"events", "orders"}
     vecs = spark.read.parquet(os.path.join(store, "vectors"))
-    sources = {r["source"] for r in vecs.select("source").distinct().collect()}
+    sources = {r[0] for r in vecs.select("metadata.source").distinct().collect()}
     assert sources == {"events", "orders"}
 
     second = sweep(spark, sf_dir, store, tables)
@@ -61,7 +64,7 @@ def test_sweep_crash_replay_is_idempotent(spark, sf_dir, tmp_path):
     sweep(spark, sf_dir, store, TABLES)
     vec_path = os.path.join(store, "vectors")
     before = sorted(
-        (r["id"], r["text"]) for r in spark.read.parquet(vec_path).collect()
+        (r["id"], r["metadata"]["text"]) for r in spark.read.parquet(vec_path).collect()
     )
     # simulate the crash: roll the watermark store back, keep vectors
     import shutil
@@ -69,7 +72,9 @@ def test_sweep_crash_replay_is_idempotent(spark, sf_dir, tmp_path):
     shutil.rmtree(os.path.join(store, "watermark"))
     replay = sweep(spark, sf_dir, store, TABLES)
     assert replay == {"events": 1000}  # delta reprocessed...
-    after = sorted((r["id"], r["text"]) for r in spark.read.parquet(vec_path).collect())
+    after = sorted(
+        (r["id"], r["metadata"]["text"]) for r in spark.read.parquet(vec_path).collect()
+    )
     assert after == before  # ...but the sink state is identical
 
 
@@ -102,8 +107,8 @@ def test_sweep_second_sweep_with_multiple_deltas(spark, sf_dir, tmp_path):
 
 def test_sweep_parallel_tables_matches_serial(spark, sf_dir, tmp_path):
     """Concurrent per-table processing (thread pool over independent
-    DAGs, commits serialized under a lock) must produce exactly the
-    serial sweep's store state."""
+    DAGs, commits serialized by the stores' writer locks) must produce
+    exactly the serial sweep's store state."""
     tables = {"events": ("ts", "event_id"), "orders": ("o_orderdate", "o_orderkey")}
 
     serial_store = str(tmp_path / "serial")
@@ -114,7 +119,7 @@ def test_sweep_parallel_tables_matches_serial(spark, sf_dir, tmp_path):
 
     def state(store):
         vecs = sorted(
-            (r["id"], r["text"], r["source"])
+            (r["id"], r["metadata"]["text"], r["metadata"]["source"])
             for r in spark.read.parquet(os.path.join(store, "vectors")).collect()
         )
         wm = sorted(
@@ -157,61 +162,47 @@ def test_sweep_error_isolation_continue(spark, sf_dir, tmp_path):
         sweep(spark, sf_dir, str(tmp_path / "s2"), {"no_such_table": ("ts", "id")})
 
 
-def test_sweep_regrow_between_ticks(spark, tmp_path):
-    """The auto-regrow path driven end-to-end by the sweep (VERDICT r4
-    task 5): tick 2's ingestion pushes the vectors table past the
-    2x-target-rows-per-bucket threshold, so the merge finishes with a
-    re-bucketing rewrite that at least doubles the bucket count — and
-    every chunk id from BOTH ticks is still findable afterwards."""
-    import datetime
+def test_sweep_stores_queryable_vectors(spark, sf_dir, tmp_path):
+    """The sweep composes the whole reference tick: delta -> chunk ->
+    embed -> keyed vector upsert -> watermark. Stored chunks carry
+    384-dim ``values`` a self-query finds at cosine 1.0; an idle sweep
+    and a replay after a lost watermark leave the store unchanged; and
+    the streaming composition writes the same store."""
+    import shutil
 
-    from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.sources.sinks import (
-        _read_marker,
-        _read_nbuckets,
-    )
+    import pytest
 
-    import pandas as pd
+    tables = {"events": ("ts", "event_id"), "orders": ("o_orderdate", "o_orderkey")}
+    store_dir = str(tmp_path / "store")
+    vec_path = os.path.join(store_dir, "vectors")
+    assert sweep(spark, sf_dir, store_dir, tables, max_parallel_tables=2) == {
+        "events": 1000,
+        "orders": 1500,
+    }
 
-    def write_events(src, rows):
-        # single-file parquet with us timestamps, like the fixtures
-        os.makedirs(src, exist_ok=True)
-        pdf = pd.DataFrame(rows, columns=["event_id", "ts", "value"])
-        pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-        pdf.to_parquet(os.path.join(src, "events.parquet"), index=False)
+    def contents(path):
+        return sorted(
+            (r["id"], tuple(r["values"]), tuple(r["metadata"]))
+            for r in spark.read.parquet(path).select("id", "values", "metadata").collect()
+        )
 
-    day1 = datetime.datetime(2024, 1, 1)
-    day2 = datetime.datetime(2024, 2, 1)
-    rows1 = [(i, day1, float(i)) for i in range(80)]
-    src1 = str(tmp_path / "src1")
-    write_events(src1, rows1)
+    stored = contents(vec_path)
+    assert len(stored) == 25 and all(len(v) == EMBED_DIM for _i, v, _m in stored)
 
-    store = str(tmp_path / "store")
-    tables = {"events": ("ts", "event_id")}
-    # chunk_size=5 -> 16 chunks; target 1 row/bucket -> created at the
-    # 16-bucket creation floor, regrow threshold = 2*1*16 = 32 chunks
-    sweep(spark, src1, store, tables, chunk_size=5, target_bucket_rows=1)
-    vec_path = os.path.join(store, "vectors")
-    n1 = _read_nbuckets(vec_path, "kbucket")
-    ids1 = {r["id"] for r in spark.read.parquet(vec_path).select("id").collect()}
-    assert len(ids1) == 16 and n1 == 16
+    store = VectorStore(spark, vec_path, EMBED_DIM)
+    probe = store.fetch(["events#0#0"]).collect()
+    assert len(probe) == 1 and probe[0]["metadata"]["source"] == "events"
+    hits = store.query([float(x) for x in probe[0]["values"]], 3, mode="exact").collect()
+    assert hits[0]["id"] == "events#0#0"
+    assert hits[0]["score"] == pytest.approx(1.0, abs=1e-6)
 
-    # tick 2: 600 new rows (later ts) -> 120 new chunks, total 136 > 32
-    rows2 = rows1 + [(1000 + i, day2, 0.0) for i in range(600)]
-    src2 = str(tmp_path / "src2")
-    write_events(src2, rows2)
-    processed = sweep(spark, src2, store, tables, chunk_size=5, target_bucket_rows=1)
-    assert processed == {"events": 600}  # watermark skipped tick-1 rows
+    assert sweep(spark, sf_dir, store_dir, tables) == {"events": 0, "orders": 0}
+    assert contents(vec_path) == stored
 
-    n2 = _read_nbuckets(vec_path, "kbucket")
-    assert n2 >= 2 * n1, (n1, n2)
-    after = spark.read.parquet(vec_path)
-    ids2 = {r["id"] for r in after.select("id").collect()}
-    assert ids1 <= ids2 and len(ids2) == 136
-    # marker row count survived the regrow rewrite
-    assert _read_marker(vec_path) == (n2, 136)
-    # the re-bucketed layout is consistent: every row's partition
-    # matches the hash of its key under the new count
-    bad = after.filter(
-        F.col("kbucket") != F.pmod(F.hash("id"), F.lit(n2)).cast("int")
-    ).count()
-    assert bad == 0
+    shutil.rmtree(os.path.join(store_dir, "watermark"))
+    assert sweep(spark, sf_dir, store_dir, tables) == {"events": 1000, "orders": 1500}
+    assert contents(vec_path) == stored
+
+    stream_dir = str(tmp_path / "stream")
+    run_multi_table_streaming(spark, sf_dir, stream_dir, tables, available_now=True)
+    assert contents(os.path.join(stream_dir, "vectors")) == stored

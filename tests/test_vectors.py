@@ -364,7 +364,7 @@ def test_map_arrow_kernels_bit_match_pandas_kernels(spark, sf_dir):
 
 
 def test_explode_kernel_bit_matches_and_stays_jvm_side(spark, sf_dir):
-    """The r12 JVM explode cosine kernel (tools/vec_jvm_ab.py:
+    """The r12 JVM explode cosine kernel (PERFORMANCE.md Round-12 explode kernel:
     steady-state tie with the Arrow kernel at sf10, ~half the
     contention degradation, no Python worker) must be
     bit-identical to the Arrow kernel — same sequential fold: a

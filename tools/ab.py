@@ -69,9 +69,9 @@ def main() -> None:
             fn(spark, sf_dir).toArrow()
             s_best = min(s_best, time.perf_counter() - t0)
             if sql is not None:
-                    t0 = time.perf_counter()
-                    con.sql(sql).arrow()
-                    d_best = min(d_best, time.perf_counter() - t0)
+                t0 = time.perf_counter()
+                con.sql(sql).arrow()
+                d_best = min(d_best, time.perf_counter() - t0)
         rows.append((name, s_best, d_best if sql else float("nan")))
         ratio = s_best / d_best if sql else float("nan")
         print(f"{name:40s} spark {s_best:7.3f}  duck {d_best:7.3f}  ratio {ratio:6.2f}x",
