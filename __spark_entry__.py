@@ -4559,9 +4559,11 @@ def agg_approx_sketches(spark, sf_dir):
         _interp("_f49", "_c49", F.col("_pos49")).alias("p49"),
         _interp("_f51", "_c51", F.col("_pos51")).alias("p51"),
     )
+    # left join: a flag whose prices are all NULL has no histogram rows
+    # (so no pct row) but is still a group — its p50_ok reads NULL
     return (
         sk.join(F.broadcast(exact), "l_returnflag")
-        .join(F.broadcast(pct), "l_returnflag")
+        .join(F.broadcast(pct), "l_returnflag", "left")
         .select(
             "l_returnflag",
             "exact_nd",

@@ -326,8 +326,10 @@ def banded_embedding_neardup(
         # implicitly; the aggregate form must filter them explicitly
         .filter(F.col(id_col).isNotNull() & F.col("bucket").isNotNull())
     )
+    # distinct ids per bucket: a repeated id would otherwise pair with
+    # itself (id_a == id_b) out of the suffix slice below
     grouped = banded.groupBy("band", "bucket").agg(
-        F.sort_array(F.collect_list(id_col)).alias("_ids")
+        F.sort_array(F.collect_set(id_col)).alias("_ids")
     )
     pairs = (
         grouped.select("_ids", F.posexplode("_ids").alias("_i", "id_a"))

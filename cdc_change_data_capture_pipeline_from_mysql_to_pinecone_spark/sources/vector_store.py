@@ -41,14 +41,15 @@ before OR just after that writer's swap (per bucket, for multi-bucket
 commits: each bucket is some committed version ≥ the query's start).
 This is the same regular-reader semantics an object-store parquet
 table has. The one multi-file decision — query(mode='ivf')'s fast-path
-gate — snapshots its marker/version files under a short SHARED flock
-so the gate itself judges one committed state; either branch it picks
-is then correct against concurrent swaps (the fast path because
-mutations keep ``_cell`` stamped under the committed quantizer with
-the pending marker covering the only inconsistent window, the
-fallback because a lagging map is compute-pruned, quantizer-consistent
-recall — rows newer than the map's watermark become visible after the
-next mutation's catch-up). Readers needing stricter
+gate — reads its two files (the rebuild-pending marker and the
+centroids) under a short SHARED flock so the gate itself judges one
+committed state; either branch it picks is then correct against
+concurrent swaps (the `_cell` probe because upsert/delete keep each
+row's `_cell` stamped under the committed quantizer, in the same
+bucket swap as the row, with the pending marker covering build_ivf's
+re-stamp window; the fallback because it is an exact scan). The row's
+``_cell`` is the ONLY IVF assignment — there is no second table to
+keep in step with it. Readers needing stricter
 read-your-own-write isolation hold :func:`.._commit.table_lock`
 around query + materialization, or back the store with a
 transactional table format.
@@ -56,14 +57,18 @@ transactional table format.
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import vectors as vec_ops
-from ._commit import atomic_write_file, table_lock
+from ._commit import atomic_write_file, table_lock, table_lock_shared
 from .sinks import (
+    _observed_bucket_ids,
+    _read_marker,
+    _read_marker_schema,
     delete_keys,
     read_keyed_table,
     recover_table,
@@ -103,8 +108,6 @@ class VectorStore:
 
     def namespaces(self) -> list[str]:
         """Namespaces with data ('' for the root, when present)."""
-        from .sinks import _observed_bucket_ids
-
         out = [""] if _observed_bucket_ids(self.path, "kbucket") else []
         if os.path.isdir(self.path):
             for d in sorted(os.listdir(self.path)):
@@ -120,8 +123,8 @@ class VectorStore:
         """Read-increment-replace of the ``_verseq`` file. NOT safe to
         call outside the table's writer lock: unsynchronized callers
         can read the same ``last`` and stamp the same version, making
-        last-call-wins nondeterministic (max_by tie). Both mutating
-        call sites (upsert) hold :func:`table_lock` around the stamp
+        last-call-wins nondeterministic (max_by tie). Both call sites
+        (upsert, build_ivf) hold :func:`table_lock` around the stamp
         AND the merge it versions. The write itself is atomic
         (tmp+replace): a crash inside a truncating open would zero the
         sequence and every later upsert would stamp versions BELOW the
@@ -164,68 +167,23 @@ class VectorStore:
             # with the data, then used as the bucket files' cluster
             # key so query(mode='ivf')'s `_cell IN (probe)` predicate
             # prunes row groups instead of decoding every vector
-            # (VERDICT r7 item 2: the map-join path computed on probed
-            # rows only but still SCANNED the whole vector column).
-            map_path = self._ivf_map_path(tpath)
-            has_map = os.path.isdir(map_path)
-            if has_map:
-                from ..operators.vectors import ivf_assign
-
-                cents = self._ivf_centroids(tpath)
-                stamped = ivf_assign(
+            cents = self._ivf_centroids(tpath)
+            if cents is not None:
+                stamped = vec_ops.ivf_assign(
                     stamped.drop("_cell"), "id", "values", cents
                 ).withColumnRenamed("cell", "_cell")
-            # the batch executes up to three times below (merge bucket
-            # discovery, merge write, map delta) — persist the bounded
-            # micro-batch across the mutation so a caller-supplied
-            # expensive DataFrame (or the cell assignment above) is
-            # computed once (same discipline as the sweep, r8)
+            # the merge executes the batch twice (bucket discovery,
+            # write) — persist the bounded micro-batch across the
+            # mutation so a caller-supplied expensive DataFrame (or the
+            # cell assignment above) is computed once
             from pyspark import StorageLevel
 
             stamped = stamped.persist(StorageLevel.MEMORY_AND_DISK)
             try:
-                touched = upsert_parquet_partitioned(
+                return upsert_parquet_partitioned(
                     self.spark, tpath, stamped, ["id"], "_ver",
-                    cluster_cols=["_cell"] if has_map else None,
+                    cluster_cols=["_cell"] if cents is not None else None,
                 )
-                # maintained IVF map (r7): quantize the tick against
-                # the stored centroids and merge per-id
-                # last-writer-wins (≙ sweep_ivf_assign). Table swap and
-                # map swap are TWO commits; the map's _map_ver
-                # watermark makes a crash between them recoverable, not
-                # silent (review catch r7): when the watermark is
-                # exactly one version behind, the delta is THIS batch
-                # (no table re-read); otherwise a prior tick was lost
-                # mid-crash, and the catch-up path re-assigns every row
-                # stamped past the watermark and semi-joins the map to
-                # live ids (healing a lost delete tick too).
-                if has_map:
-                    from ..operators.incremental import (
-                        delta_ivf_assign,
-                        merge_ivf_assignments,
-                    )
-
-                    map_ver = self._ivf_map_ver(map_path)
-                    stored = self.spark.read.parquet(map_path)
-                    if map_ver == ver - 1:
-                        # the batch's cells were already assigned above
-                        # — the delta is exactly (id, _cell, _ver)
-                        delta = stamped.select(
-                            "id", F.col("_cell").alias("cell"), "_ver"
-                        )
-                        merged = merge_ivf_assignments(stored, delta, "id", "_ver")
-                    else:
-                        live = self._table(namespace)
-                        delta_rows = live.select("id", "values", "_ver").filter(
-                            F.col("_ver") > map_ver
-                        )
-                        merged = merge_ivf_assignments(
-                            stored,
-                            delta_ivf_assign(delta_rows, "id", "values", cents, "_ver"),
-                            "id", "_ver",
-                        ).join(live.select("id"), "id", "left_semi")
-                    self._commit_ivf_map(map_path, merged, cents, upto_ver=ver)
-                return touched
             finally:
                 stamped.unpersist()
 
@@ -233,181 +191,86 @@ class VectorStore:
         """Remove ids; only their bucket partitions are rewritten.
         Empty id list is a no-op. Takes the same writer lock as
         upsert — a delete racing a merge is a lost-update hazard too.
-        A maintained IVF map (build_ivf) drops the ids too, keeping
-        map and table in lockstep."""
+        The IVF assignment rides the deleted rows, so it goes in the
+        same bucket swap; rewritten buckets stay ``_cell``-clustered."""
         if not ids:
             return 0
         keys = self.spark.createDataFrame([(i,) for i in ids], ["id"])
         tpath = self._at(namespace)
         with table_lock(tpath):
             recover_table(tpath)  # same pre-merge recovery as upsert
-            map_path = self._ivf_map_path(tpath)
-            has_map = os.path.isdir(map_path)
-            if has_map:
-                # stamp BEFORE the merge, matching upsert's ordering
-                # (ADVICE r7): the watermark-lag window then covers the
-                # WHOLE mutation — a crash anywhere between here and
-                # the map commit leaves _map_ver < _verseq, and the
-                # next mutation's catch-up heals it. (The old
-                # stamp-after-delete ordering had a window where the
-                # table had committed the delete but no watermark lag
-                # existed, so the map kept the deleted ids forever.)
-                pre_ver = self._current_version(tpath)
-                map_ver = self._ivf_map_ver(map_path)
-                ver = self._next_version(tpath)
-            n = delete_keys(
+            celled = "_cell" in self._table(namespace).columns
+            return delete_keys(
                 self.spark, tpath, keys, ["id"],
-                cluster_cols=["_cell"] if has_map else None,
+                cluster_cols=["_cell"] if celled else None,
             )
-            if has_map:
-                cents = self._ivf_centroids(tpath)
-                kept = self.spark.read.parquet(map_path).join(
-                    F.broadcast(keys), "id", "left_anti"
-                )
-                if map_ver < pre_ver:
-                    # a PRIOR tick crashed between its table commit and
-                    # its map commit (ADVICE r7): committing the kept
-                    # map at upto_ver=ver without healing would advance
-                    # the watermark past the missed rows forever. Run
-                    # the same catch-up as upsert: re-assign live rows
-                    # stamped past the stale watermark, then keep only
-                    # live ids (prunes rows a lost DELETE tick missed).
-                    from ..operators.incremental import (
-                        delta_ivf_assign,
-                        merge_ivf_assignments,
-                    )
 
-                    live = self._table(namespace)
-                    delta_rows = live.select("id", "values", "_ver").filter(
-                        F.col("_ver") > map_ver
-                    )
-                    kept = merge_ivf_assignments(
-                        kept,
-                        delta_ivf_assign(delta_rows, "id", "values", cents, "_ver"),
-                        "id", "_ver",
-                    ).join(live.select("id"), "id", "left_semi")
-                self._commit_ivf_map(map_path, kept, cents, upto_ver=ver)
-            return n
-
-    # -- maintained IVF index (r7, ≙ the sweep family's cell map) -----
-
-    def _ivf_map_path(self, table_path: str) -> str:
-        # underscore prefix: invisible to the vector table's own Spark
-        # file listing, like the _ns-* namespace subdirs
-        return os.path.join(table_path, "_ivf-map")
+    # -- maintained IVF index ------------------------------------------
 
     def _rebuild_pending_path(self, table_path: str) -> str:
-        """Marker that a build_ivf's table re-stamp may have committed
-        while its map swap did not (r8). The watermark-lag gate alone
-        cannot catch the full failure: a build crash between the two
-        commits leaves NEW-quantizer cells in the rows while the
-        committed centroids are OLD, and a LATER ordinary tick's
-        catch-up makes the watermark current again — the `_cell` fast
-        path would then probe old-centroid cells against new-centroid
-        row values, silently missing neighbors. The marker is written
-        before the rewrite and removed only after the map swap, so the
-        fast path stays OFF (quantizer-consistent map-join fallback)
-        across the whole window and after any crash inside it, until a
-        build completes cleanly."""
+        """Marker that build_ivf has committed (or is about to commit)
+        new centroids while the rows may still carry cells from the OLD
+        quantizer. Written before the centroids and removed only after
+        the re-stamp commits, so the `_cell` probe stays OFF (exact-scan
+        fallback) across the whole window and after any crash inside
+        it, until a build completes cleanly."""
         return os.path.join(table_path, "_ivf-rebuild-pending")
 
-    def _ivf_centroids(self, table_path: str) -> list[tuple[int, list[float]]]:
-        """The trained quantizer, committed INSIDE the map directory
-        (underscore marker) so the one-rename swap moves map and
-        centroids together — a crash can never pair a new map with old
-        centroids."""
-        import json as _json
+    def _centroids_path(self, table_path: str) -> str:
+        # underscore prefix: invisible to the table's Spark file listing
+        return os.path.join(table_path, "_ivf_centroids.json")
 
-        with open(os.path.join(self._ivf_map_path(table_path), "_centroids.json")) as fh:
-            raw = _json.load(fh)
+    def _ivf_centroids(self, table_path: str) -> list[tuple[int, list[float]]] | None:
+        """The trained quantizer, or None when no index was built."""
+        try:
+            with open(self._centroids_path(table_path)) as fh:
+                raw = json.load(fh)
+        except FileNotFoundError:
+            return None
         return [(int(c), [float(x) for x in v]) for c, v in raw]
 
-    def _ivf_map_ver(self, map_path: str) -> int:
-        """The table ``_verseq`` value the committed map REFLECTS —
-        the map's watermark. Rows stamped after it are exactly what a
-        catch-up tick must re-assign."""
-        with open(os.path.join(map_path, "_map_ver")) as fh:
-            return int(fh.read().strip())
-
-    def _current_version(self, table_path: str) -> int:
-        seq_path = os.path.join(table_path, _VERSEQ)
-        if os.path.exists(seq_path):
-            with open(seq_path) as fh:
-                return int(fh.read().strip() or 0)
-        return 0
-
-    def _commit_ivf_map(
-        self, map_path: str, new_map: DataFrame, centroids, upto_ver: int
-    ) -> None:
-        """Write (id, cell, _ver) + the centroid marker + the
-        ``_map_ver`` watermark to a tmp dir and swap all three in with
-        ONE atomic rename (the sweep family's exactly-once pivot).
-        The watermark is what makes the TWO-commit sequence
-        (table swap, then map swap) crash-safe WITHOUT being atomic: a
-        crash between them leaves the map's watermark behind the
-        table's ``_verseq``, and the next mutation's catch-up path
-        re-assigns every row stamped past the watermark (review catch
-        r7 — without it a missed tick went stale silently, forever).
-        The map is a full rewrite per tick — ~16 B of payload per
-        vector, fine to corpus sizes far beyond the store's own bucket
-        layout; a lakehouse backend would MERGE instead (same seam as
-        the module docstring's swap note)."""
-        import json as _json
-        import uuid as _uuid
-
-        from ._commit import swap_in
-
-        tmp = f"{map_path}.tmp-{_uuid.uuid4().hex[:8]}"
-        new_map.write.mode("overwrite").parquet(tmp)
-        with open(os.path.join(tmp, "_centroids.json"), "w") as fh:
-            _json.dump([[c, v] for c, v in centroids], fh)
-        with open(os.path.join(tmp, "_map_ver"), "w") as fh:
-            fh.write(str(upto_ver))
-        swap_in(map_path, tmp)
-
     def build_ivf(self, k: int = 8, iters: int = 2, namespace: str = "") -> int:
-        """Train the IVF coarse quantizer on the CURRENT corpus,
-        materialize the full (id, cell) map, and REWRITE the table
-        with the assigned ``_cell`` on every row, cell-clustered
-        within each bucket's files — the offline REBUILD of the
-        maintained-index contract (retraining centroids is never a
-        tick; hosted ANN indexes work the same way). After this,
-        every upsert/delete keeps map, row cells, and clustering
-        fresh incrementally, and ``query(mode='ivf')`` probes the
-        table's own ``_cell`` column: the pushed ``IN`` predicate
-        prunes cell-clustered row groups, so the probe's I/O — not
-        just its compute — is ~n_probe/k of the vector bytes (VERDICT
-        r7 item 2). The O(table) rewrite is the build's cost, same
-        class as the k-means training scans it already pays. Returns
-        rows mapped."""
-        from ..operators.vectors import ivf_assign, train_ivf_centroids
-
+        """Train the IVF coarse quantizer on the CURRENT corpus and
+        REWRITE the table with the assigned ``_cell`` on every row,
+        cell-clustered within each bucket's files — the offline REBUILD
+        of the maintained-index contract (retraining centroids is never
+        a tick; hosted ANN indexes work the same way). After this,
+        every upsert/delete keeps row cells and clustering fresh in the
+        rows' own bucket swaps, and ``query(mode='ivf')`` probes the
+        table's ``_cell`` column: the pushed ``IN`` predicate prunes
+        cell-clustered row groups, so the probe's I/O — not just its
+        compute — is ~n_probe/k of the vector bytes. The O(table)
+        rewrite is the build's cost, same class as the k-means training
+        scans it already pays. The state on disk is
+        ``_ivf_centroids.json`` plus the rebuild-pending marker while a
+        build is in flight. Returns the table's committed row count."""
         tpath = self._at(namespace)
         with table_lock(tpath):
             recover_table(tpath)
             t = self._table(namespace)
-            # emptiness checked BEFORE training (review catch r7:
-            # k-means over zero seeds dies inside ivf_assign with a
-            # cryptic empty-array AnalysisException, not this error)
+            # emptiness checked BEFORE training (k-means over zero
+            # seeds dies inside ivf_assign with a cryptic
+            # empty-array AnalysisException, not this error)
             if t.limit(1).count() == 0:
                 raise ValueError("build_ivf on an empty store")
-            cents = train_ivf_centroids(
+            cents = vec_ops.train_ivf_centroids(
                 t.select("id", "values", "_ver"), "id", "values", k=k, iters=iters
             )
             # one re-stamp version for the whole rebuild: re-upserted
             # rows must WIN the last-writer-wins merge against their
             # current images (an equal-version tie would be
-            # nondeterministic), and the map committed at upto_ver=ver
-            # then exactly reflects them
+            # nondeterministic)
             ver = self._next_version(tpath)
-            # table re-stamp and map swap are two commits under
-            # DIFFERENT quantizers — flag the window (see
-            # _rebuild_pending_path): any crash inside it leaves the
-            # marker, disabling the `_cell` fast path until a build
-            # completes cleanly
+            # the centroids and the row re-stamp are two commits — flag
+            # the window (see _rebuild_pending_path): any crash inside
+            # it leaves the marker, disabling the `_cell` probe until a
+            # build completes cleanly
             atomic_write_file(self._rebuild_pending_path(tpath), str(ver))
+            atomic_write_file(
+                self._centroids_path(tpath), json.dumps([[c, v] for c, v in cents])
+            )
             restamped = (
-                ivf_assign(
+                vec_ops.ivf_assign(
                     t.drop("kbucket", "_ver", "_cell"), "id", "values", cents
                 )
                 .withColumnRenamed("cell", "_cell")
@@ -417,12 +280,8 @@ class VectorStore:
                 self.spark, tpath, restamped, ["id"], "_ver",
                 cluster_cols=["_cell"],
             )
-            amap = read_keyed_table(self.spark, tpath).select(
-                "id", F.col("_cell").alias("cell"), "_ver"
-            )
-            self._commit_ivf_map(self._ivf_map_path(tpath), amap, cents, upto_ver=ver)
             os.remove(self._rebuild_pending_path(tpath))
-            return self.spark.read.parquet(self._ivf_map_path(tpath)).count()
+            return _read_marker(tpath)[1]
 
     def _schema_path(self, table_path: str) -> str:
         return os.path.join(table_path, "_schema.ddl")
@@ -446,8 +305,6 @@ class VectorStore:
     def _table(self, namespace: str = "") -> DataFrame:
         tpath = self._at(namespace)
         recover_table(tpath)
-        from .sinks import _observed_bucket_ids
-
         if not _observed_bucket_ids(tpath, "kbucket"):
             # every row deleted (or nothing upserted yet): an empty
             # store reads as an empty frame, never a parquet
@@ -457,26 +314,44 @@ class VectorStore:
             # arrives); the ddl file is the pre-first-delete fallback.
             from pyspark.sql.types import IntegerType, StructType
 
-            from .sinks import _read_marker_schema
-
             marker_schema = _read_marker_schema(tpath)
             if marker_schema is not None:
                 return self.spark.createDataFrame([], marker_schema)
             if os.path.exists(self._schema_path(tpath)):
-                import json as _json
-
                 with open(self._schema_path(tpath)) as fh:
-                    schema = StructType.fromJson(_json.load(fh))
+                    schema = StructType.fromJson(json.load(fh))
             else:
                 schema = StructType()
             schema = schema.add("_ver", "long").add("kbucket", IntegerType())
             return self.spark.createDataFrame([], schema)
-        from .sinks import read_keyed_table
-
         # canonical-schema read: records upserted after a schema
         # evolution (new metadata columns) read correctly against
         # buckets written before it (missing columns -> NULL)
         return read_keyed_table(self.spark, tpath)
+
+    def _ivf_probe(
+        self, namespace: str, t: DataFrame, vector: list[float], n_probe: int
+    ) -> list[int] | None:
+        """The ``n_probe`` cells nearest ``vector`` under the committed
+        quantizer, or None when a rebuild is pending (the rows' cells
+        may come from another quantizer, so only an exact scan is
+        safe). The marker and the centroids are read together under a
+        short SHARED lock, so no build is mid-commit between the two
+        reads; the lock is released before any job runs (reads stay
+        lock-free by contract, module docstring "Read consistency")."""
+        tpath = self._at(namespace)
+        with table_lock_shared(tpath):
+            pending = os.path.exists(self._rebuild_pending_path(tpath))
+            cents = self._ivf_centroids(tpath)
+        if cents is None:
+            raise ValueError("mode='ivf' needs build_ivf() first")
+        if pending or "_cell" not in t.columns:
+            return None
+        ranked = sorted(
+            ((sum(x * y for x, y in zip(vector, cv)), cid) for cid, cv in cents),
+            reverse=True,
+        )
+        return [cid for _s, cid in ranked[:n_probe]]
 
     def query(
         self,
@@ -501,7 +376,10 @@ class VectorStore:
         column, so both the decoded bytes (row-group pruning on the
         pushed ``IN`` predicate) and the cosine compute are
         ~n_probe/k of the corpus; recall grows with n_probe, exact
-        cosine within the probed cells. ``mode='hybrid'`` fuses
+        cosine within the probed cells. While a rebuild is pending
+        (a build_ivf crashed between its centroid write and its row
+        re-stamp) ``mode='ivf'`` serves an exact scan instead — never
+        worse recall. ``mode='hybrid'`` fuses
         the exact vector ranking with a BM25 lexical ranking of
         ``query_terms`` over ``text_col`` by reciprocal-rank fusion
         (the hybrid-search verb of hosted vector stores): each
@@ -521,11 +399,10 @@ class VectorStore:
         t = self._table(namespace)
         if where is not None:
             t = t.filter(where)
-        if mode == "exact":
+        probe = self._ivf_probe(namespace, t, vector, n_probe) if mode == "ivf" else None
+        if mode == "exact" or (mode == "ivf" and probe is None):
             hits = vec_ops.cosine_topk(t, "id", "values", vector, k=top_k)
         elif mode == "ann":
-            from .sinks import _read_marker
-
             # one marker read — stats('') would also build the whole
             # per-namespace breakdown (a listdir + read per namespace)
             # on every ANN query
@@ -536,80 +413,21 @@ class VectorStore:
                 n_rows=row_count or 0,
             )
         elif mode == "ivf":
-            tpath = self._at(namespace)
-            map_path = self._ivf_map_path(tpath)
-            if not os.path.isdir(map_path):
-                raise ValueError("mode='ivf' needs build_ivf() first")
-            from ..functions.vector import cosine_sim as _cosine_sim
-            from ..functions.vector import lit_double_array
+            from ..functions.vector import cosine_sim, lit_double_array
 
-            cents = self._ivf_centroids(tpath)
-            ranked = sorted(
-                ((sum(x * y for x, y in zip(vector, cv)), cid) for cid, cv in cents),
-                reverse=True,
+            # probe the table's OWN `_cell` column: the pushed `IN`
+            # predicate prunes cell-clustered row groups, so the
+            # probe's I/O is ~n_probe/k of the vector bytes
+            hits = (
+                t.filter(F.col("_cell").isin(probe))
+                .select(
+                    "id",
+                    F.round(cosine_sim(F.col("values"), lit_double_array(vector)), 6)
+                    .alias("score"),
+                )
+                .orderBy(F.col("score").desc(), F.col("id"))
+                .limit(top_k)
             )
-            probe = [cid for _s, cid in ranked[:n_probe]]
-            q = lit_double_array(vector)
-            # Fast path (r8): probe the table's OWN `_cell` column —
-            # build_ivf stamps it on every row and upsert/delete keep
-            # it fresh and cell-clustered within each bucket's files,
-            # so the pushed `IN` predicate prunes row groups and the
-            # probe's I/O is ~n_probe/k of the vector bytes, matching
-            # the docstring's claim (VERDICT r7 item 2). Two gates:
-            # the map watermark must be CURRENT (an ordinary tick's
-            # crash window — rows past the watermark may have no map
-            # entry yet), and no rebuild may be PENDING (a build crash
-            # between its table re-stamp and its map swap leaves
-            # new-quantizer cells under old committed centroids, a
-            # state a later tick's watermark heal CANNOT detect — see
-            # _rebuild_pending_path). Either gate failing falls back
-            # to the map-join path (compute-pruned,
-            # quantizer-consistent, healed by the next mutation's
-            # catch-up / the next clean build).
-            # Gate state is THREE files (pending marker, map watermark,
-            # table _verseq); snapshot them under a short SHARED lock so
-            # no writer is mid-commit between the individual reads
-            # (ADVICE r8 — lock-free multi-file reads were a
-            # check-then-act window). The lock is released before the
-            # job runs: reads stay lock-free by contract (module
-            # docstring, "Read consistency") — a swap landing DURING
-            # execution serves one committed recent state either way,
-            # because upsert/delete keep `_cell` stamped under the
-            # committed quantizer and build_ivf keeps the pending
-            # marker up across its whole table-restamp/map-swap span.
-            from ._commit import table_lock_shared
-
-            with table_lock_shared(tpath):
-                fast_ok = (
-                    "_cell" in t.columns
-                    and not os.path.exists(self._rebuild_pending_path(tpath))
-                    and self._ivf_map_ver(map_path) >= self._current_version(tpath)
-                )
-            if fast_ok:
-                hits = (
-                    t.filter(F.col("_cell").isin(probe))
-                    .select(
-                        "id",
-                        F.round(_cosine_sim(F.col("values"), q), 6).alias("score"),
-                    )
-                    .orderBy(F.col("score").desc(), F.col("id"))
-                    .limit(top_k)
-                )
-            else:
-                amap = (
-                    self.spark.read.parquet(map_path)
-                    .filter(F.col("cell").isin(probe))
-                    .select("id")
-                )
-                hits = (
-                    t.join(amap, "id")
-                    .select(
-                        "id",
-                        F.round(_cosine_sim(F.col("values"), q), 6).alias("score"),
-                    )
-                    .orderBy(F.col("score").desc(), F.col("id"))
-                    .limit(top_k)
-                )
         elif mode == "hybrid":
             if not query_terms:
                 raise ValueError("mode='hybrid' needs query_terms")
@@ -656,8 +474,6 @@ class VectorStore:
         semi-join instead of a literal IN list (plan size stays O(1);
         bucket pruning still applies — the distinct bucket set is at
         most the table's bucket count regardless of batch size)."""
-        from .sinks import _read_marker
-
         n, _rows = _read_marker(self._at(namespace))
         t = self._table(namespace)
         if not ids:
@@ -685,25 +501,20 @@ class VectorStore:
         describe_index_stats shape of the hosted API.
 
         ``include_cells=True`` adds the maintained IVF index's
-        occupancy (``cells``: cell -> vector count, from the committed
-        map — one small scan of (id, cell), never the vector column).
-        The map is the right source, not the table's ``_cell`` column:
-        the map is committed with its centroids and healed by the
-        watermark protocol, so its counts are quantizer-consistent
-        even inside a crashed-rebuild window."""
-        from .sinks import _read_marker
-
-        n, rows = _read_marker(self._at(namespace))
+        occupancy (``cells``: cell -> vector count) when an index was
+        built: one group-by over the table's int ``_cell`` column,
+        never the vector column. The counts are the rows' own
+        assignments, so they are exactly what an ivf probe filters on;
+        while a rebuild is pending they may mix two quantizers."""
+        tpath = self._at(namespace)
+        n, rows = _read_marker(tpath)
         out = {"count": rows or 0, "num_buckets": n or 0, "dim": self.dim}
         if include_cells:
-            map_path = self._ivf_map_path(self._at(namespace))
-            if os.path.isdir(map_path):
+            t = self._table(namespace)
+            if "_cell" in t.columns:
                 out["cells"] = {
-                    r["cell"]: r["n"]
-                    for r in self.spark.read.parquet(map_path)
-                    .groupBy("cell")
-                    .agg(F.count(F.lit(1)).alias("n"))
-                    .collect()
+                    r["_cell"]: r["n"]
+                    for r in t.groupBy("_cell").agg(F.count(F.lit(1)).alias("n")).collect()
                 }
         if not namespace:
             nss = {}

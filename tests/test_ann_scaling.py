@@ -93,3 +93,24 @@ def test_banded_lsh_recall_superset(spark, sf_dir):
     b = {(r["id_a"], r["id_b"]) for r in banded.collect()}
     assert s <= b
     assert len(b) >= len(s)
+
+
+def test_banded_neardup_no_self_pair_for_repeated_id(spark):
+    """An id that appears twice in the embedding frame collides with
+    itself in every band; the candidate stage must still never emit
+    an (x, x) pair."""
+    e = spark.createDataFrame(
+        [
+            (1, [1.0, 0.0, 0.0, 0.0]),
+            (1, [1.0, 0.0, 0.0, 0.0]),
+            (2, [0.99, 0.01, 0.0, 0.0]),
+            (3, [0.0, 1.0, 0.0, 0.0]),
+        ],
+        "vec_id long, embedding array<double>",
+    )
+    out = vec_ops.banded_embedding_neardup(
+        e, "vec_id", "embedding", dim=4, n_tables=2, n_planes=2, threshold=0.9
+    )
+    pairs = {(r["id_a"], r["id_b"]) for r in out.collect()}
+    assert all(a != b for a, b in pairs), pairs
+    assert (1, 2) in pairs

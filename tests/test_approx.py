@@ -61,3 +61,32 @@ def test_percentile_approx_brackets_exact(spark, sf_dir):
     ).collect()[0]
     spread = r["hi"] - r["lo"]
     assert abs(r["approx"] - r["exact"]) / spread < 0.05
+
+
+def test_registry_sketch_query_keeps_all_null_price_group(spark, sf_dir, tmp_path):
+    """A return flag whose prices are all NULL is still a group of
+    agg_approx_sketches: it has no exact-percentile corridor, so its
+    p50_ok is NULL, but its row (and exact_nd) must not be dropped."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as entry
+
+    li = pq.read_table(os.path.join(sf_dir, "lineitem.parquet"))
+    price = li["l_extendedprice"]
+    nulled = pc.if_else(
+        pc.equal(li["l_returnflag"], "N"), pa.scalar(None, price.type), price
+    )
+    li = li.set_column(
+        li.schema.get_field_index("l_extendedprice"), "l_extendedprice", nulled
+    )
+    pq.write_table(li, str(tmp_path / "lineitem.parquet"))
+
+    got = {
+        r["l_returnflag"]: r
+        for r in entry.queries()["agg_approx_sketches"](spark, str(tmp_path)).collect()
+    }
+    assert sorted(got) == ["A", "N", "R"], got
+    assert got["N"]["p50_ok"] is None and got["N"]["exact_nd"] > 0
+    assert got["A"]["p50_ok"] and got["R"]["p50_ok"]

@@ -376,10 +376,11 @@ def test_vector_store_query_metadata_filter(spark, tmp_path):
 
 def test_vector_store_maintained_ivf(spark, tmp_path):
     """r7 (VERDICT r6 task 6 motivation): build_ivf trains once; after
-    that every upsert/delete maintains the (id, cell) map in the same
-    locked commit, so query(mode='ivf') serves CURRENT data without a
-    rebuild. The map must always equal a one-shot re-assignment of the
-    live corpus against the stored centroids (tick == recompute)."""
+    that every upsert/delete keeps each row's `_cell` in the row's own
+    bucket swap, so query(mode='ivf') serves CURRENT data without a
+    rebuild. The stored cells must always equal a one-shot
+    re-assignment of the live corpus against the stored centroids
+    (tick == recompute)."""
     import numpy as np
 
     from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.operators.vectors import (
@@ -399,17 +400,15 @@ def test_vector_store_maintained_ivf(spark, tmp_path):
     ])
     assert store.build_ivf(k=4, iters=2) == 40
 
-    def map_equals_recompute():
-        tpath = store._at("")
-        cents = store._ivf_centroids(tpath)
-        live = store._table("").select("id", "values")
+    def cells_equal_recompute():
+        cents = store._ivf_centroids(store._at(""))
+        live = store._table("")
         oneshot = {r["id"]: r["cell"]
                    for r in ivf_assign(live, "id", "values", cents).collect()}
-        stored = {r["id"]: r["cell"]
-                  for r in spark.read.parquet(store._ivf_map_path(tpath)).collect()}
+        stored = {r["id"]: r["_cell"] for r in live.select("id", "_cell").collect()}
         assert stored == oneshot
 
-    map_equals_recompute()
+    cells_equal_recompute()
 
     # with every cell probed, ivf == exact (recall 1)
     q = [float(x) for x in vecs[13]]
@@ -423,19 +422,18 @@ def test_vector_store_maintained_ivf(spark, tmp_path):
     # query vector must rank first in ivf mode
     near = [x + 1e-3 for x in q]
     store.upsert([{"id": "fresh", "values": near, "metadata": "new"}])
-    map_equals_recompute()
+    cells_equal_recompute()
     hits = [r["id"] for r in store.query(q, top_k=2, mode="ivf", n_probe=1).collect()]
     assert "fresh" in hits
 
     # moved vector flips its cell via last-writer-wins
     store.upsert([{"id": "v13", "values": [-x for x in q], "metadata": "moved"}])
-    map_equals_recompute()
+    cells_equal_recompute()
 
-    # delete drops the id from the map in the same commit
+    # delete drops the id and its cell in the same commit
     store.delete(["fresh"])
-    tpath = store._at("")
-    ids = {r["id"] for r in spark.read.parquet(store._ivf_map_path(tpath)).collect()}
-    assert "fresh" not in ids and len(ids) == 40
+    cells_equal_recompute()
+    assert sum(store.stats(include_cells=True)["cells"].values()) == 40
     assert all(r["id"] != "fresh"
                for r in store.query(q, top_k=5, mode="ivf", n_probe=4).collect())
 
@@ -447,83 +445,59 @@ def test_vector_store_maintained_ivf(spark, tmp_path):
         other.query([1.0] * dim, mode="ivf")
 
 
-def test_vector_store_ivf_map_crash_catchup(spark, tmp_path):
-    """r7 review catch: table swap and map swap are two commits; a
-    crash between them must leave a RECOVERABLE map, not a silently
-    stale one. The map's _map_ver watermark lags the table's _verseq
-    after such a crash, and the next mutation's catch-up path
-    re-assigns every row stamped past it (and semi-joins away ids a
-    lost delete tick removed)."""
-    import numpy as np
+def _commit_then_crash(real):
+    """Wrap a commit function so it commits, then raises — a process
+    killed right after its table swap."""
+    def wrapped(*a, **k):
+        real(*a, **k)
+        raise OSError("crash after table commit")
+    return wrapped
 
-    from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.operators.vectors import (
-        ivf_assign,
+
+def test_vector_store_committed_upsert_visible_to_ivf(spark, tmp_path, monkeypatch):
+    """An upsert whose table commit landed is visible to ivf search at
+    once, even if the process died right after that commit: the row's
+    `_cell` commits in the same bucket swap as the row, so there is no
+    second commit left to lose."""
+    import numpy as np
+    import pytest as _pytest
+
+    from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.sources import (
+        vector_store as vs_mod,
     )
     from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.sources.vector_store import (
         VectorStore,
     )
 
-    dim = 4
+    dim, k = 4, 3
     rng = np.random.RandomState(5)
     vecs = rng.randn(20, dim)
     store = VectorStore(spark, str(tmp_path / "crash_idx"), dim=dim)
     store.upsert([
         {"id": f"v{i}", "values": [float(x) for x in vecs[i]]} for i in range(20)
     ])
-    store.build_ivf(k=3, iters=1)
-    tpath = store._at("")
+    store.build_ivf(k=k, iters=1)
 
-    def stored_map():
-        return {r["id"]: r["cell"]
-                for r in spark.read.parquet(store._ivf_map_path(tpath)).collect()}
-
-    def recompute():
-        cents = store._ivf_centroids(tpath)
-        live = store._table("").select("id", "values")
-        return {r["id"]: r["cell"]
-                for r in ivf_assign(live, "id", "values", cents).collect()}
-
-    # crash AFTER the table commit, BEFORE the map commit
-    real_commit = store._commit_ivf_map
-    store._commit_ivf_map = lambda *a, **k: (_ for _ in ()).throw(OSError("crash"))
-    import pytest as _pytest
-    with _pytest.raises(OSError):
-        store.upsert([{"id": "missed", "values": [9.0, 0.0, 0.0, 0.0]}])
-    store._commit_ivf_map = real_commit
-    assert "missed" in {r["id"] for r in store.fetch(["missed"]).collect()}
-    assert "missed" not in stored_map()          # the stale window
-
-    # the next ordinary tick heals the miss via the watermark catch-up
-    store.upsert([{"id": "later", "values": [0.0, 9.0, 0.0, 0.0]}])
-    m = stored_map()
-    assert "missed" in m and "later" in m
-    assert m == recompute()
-
-    # lost DELETE tick: crash between delete_keys and the map commit
-    store._commit_ivf_map = lambda *a, **k: (_ for _ in ()).throw(OSError("crash"))
-    with _pytest.raises(OSError):
-        store.delete(["v3"])
-    store._commit_ivf_map = real_commit
-    assert store.fetch(["v3"]).count() == 0      # table committed
-    assert "v3" in stored_map()                  # map stale
-    store.upsert([{"id": "heal", "values": [0.0, 0.0, 9.0, 0.0]}])
-    m = stored_map()
-    assert "v3" not in m and m == recompute()
+    q = [9.0, 0.0, 0.0, 0.0]
+    with monkeypatch.context() as m:
+        m.setattr(vs_mod, "upsert_parquet_partitioned",
+                  _commit_then_crash(vs_mod.upsert_parquet_partitioned))
+        with _pytest.raises(OSError):
+            store.upsert([{"id": "missed", "values": q}])
+    hits = store.query(q, top_k=3, mode="ivf", n_probe=k).collect()
+    assert hits[0]["id"] == "missed", [r["id"] for r in hits]
+    assert sum(store.stats(include_cells=True)["cells"].values()) == 21
 
 
 def _ivf_probe_kind(df):
-    """'table' when the probe pushes the TABLE's `_cell` column (fast
-    path), 'map' when it pushes the map's `cell` (fallback) — path
-    strings are elided in plan text, so the pushed-filter column name
-    is the reliable discriminator. Handles both In(...) and the
-    single-probe EqualTo(...) forms."""
+    """'table' when the probe pushes the table's `_cell` column into
+    the scan, 'none' when no `_cell` filter reaches it (the exact-scan
+    fallback) — path strings are elided in plan text, so the
+    pushed-filter column name is the reliable discriminator. Handles
+    both In(...) and the single-probe EqualTo(...) forms."""
     plan = df._jdf.queryExecution().executedPlan().toString()
     pushed = " ".join(ln for ln in plan.splitlines() if "PushedFilters" in ln)
-    if "(_cell" in pushed:
-        return "table"
-    if "(cell," in pushed or "(cell)" in pushed:
-        return "map"
-    return "none"
+    return "table" if "(_cell" in pushed else "none"
 
 
 def test_vector_store_ivf_cell_clustered_probe(spark, tmp_path):
@@ -539,6 +513,9 @@ def test_vector_store_ivf_cell_clustered_probe(spark, tmp_path):
     import numpy as np
     import pyarrow.parquet as pq
 
+    from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.operators.vectors import (
+        ivf_assign,
+    )
     from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.sources.vector_store import (
         VectorStore,
     )
@@ -555,11 +532,12 @@ def test_vector_store_ivf_cell_clustered_probe(spark, tmp_path):
 
     t = store._table("")
     assert "_cell" in t.columns
-    # table cells == committed map (same quantizer, same rows)
+    # table cells == a recompute against the committed centroids
     tbl = {r["id"]: r["_cell"] for r in t.select("id", "_cell").collect()}
-    amap = {r["id"]: r["cell"]
-            for r in spark.read.parquet(store._ivf_map_path(tpath)).collect()}
-    assert tbl == amap and len(tbl) == 400
+    cents = store._ivf_centroids(tpath)
+    oneshot = {r["id"]: r["cell"]
+               for r in ivf_assign(t, "id", "values", cents).collect()}
+    assert tbl == oneshot and len(tbl) == 400
 
     def assert_cell_sorted():
         import os as _os
@@ -584,8 +562,6 @@ def test_vector_store_ivf_cell_clustered_probe(spark, tmp_path):
     plan = hits._jdf.queryExecution().executedPlan().toString()
     pushed = [ln for ln in plan.splitlines() if "PushedFilters" in ln]
     assert pushed and "_cell" in "".join(pushed), plan
-    # and NO join against the map in the fast path — the probe pushes
-    # the TABLE's `_cell`, never the map's `cell`
     assert _ivf_probe_kind(hits) == "table", plan
 
     # incremental upserts keep cells + clustering fresh
@@ -659,84 +635,6 @@ def test_vector_store_ivf_rowgroup_pruning(spark, tmp_path):
             hconf.set("parquet.block.size", old_block)
 
 
-def test_vector_store_delete_crash_heal(spark, tmp_path):
-    """ADVICE r7 (medium): delete() must run the same watermark
-    catch-up as upsert. If a prior tick crashed between its table
-    commit and its map commit, a bare anti-join-and-commit at the new
-    version would advance the watermark past the missed rows FOREVER.
-    And (low) the verseq bump must precede delete_keys, so a crash
-    anywhere inside the mutation leaves watermark lag for the next
-    tick to heal."""
-    import numpy as np
-    import pytest as _pytest
-
-    from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.operators.vectors import (
-        ivf_assign,
-    )
-    from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.sources.vector_store import (
-        VectorStore,
-    )
-
-    dim = 4
-    rng = np.random.RandomState(7)
-    vecs = rng.randn(20, dim)
-    store = VectorStore(spark, str(tmp_path / "dcrash_idx"), dim=dim)
-    store.upsert([
-        {"id": f"v{i}", "values": [float(x) for x in vecs[i]]} for i in range(20)
-    ])
-    store.build_ivf(k=3, iters=1)
-    tpath = store._at("")
-
-    def stored_map():
-        return {r["id"]: r["cell"]
-                for r in spark.read.parquet(store._ivf_map_path(tpath)).collect()}
-
-    def recompute():
-        cents = store._ivf_centroids(tpath)
-        live = store._table("").select("id", "values")
-        return {r["id"]: r["cell"]
-                for r in ivf_assign(live, "id", "values", cents).collect()}
-
-    # crash an upsert AFTER the table commit, BEFORE the map commit
-    real_commit = store._commit_ivf_map
-    store._commit_ivf_map = lambda *a, **k: (_ for _ in ()).throw(OSError("crash"))
-    with _pytest.raises(OSError):
-        store.upsert([{"id": "missed", "values": [9.0, 0.0, 0.0, 0.0]}])
-    store._commit_ivf_map = real_commit
-    assert "missed" not in stored_map()
-
-    # the next mutation is a DELETE of other ids: it must heal the
-    # missed row, drop the deleted ones, and land map == recompute
-    store.delete(["v1", "v2"])
-    m = stored_map()
-    assert "missed" in m, "delete() advanced the watermark past a missed upsert"
-    assert "v1" not in m and "v2" not in m
-    assert m == recompute()
-
-    # verseq-before-merge ordering: a crash INSIDE the table mutation
-    # (after delete_keys committed) still leaves watermark lag, so the
-    # next tick prunes the ghost ids from the map
-    from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.sources import (
-        vector_store as vs_mod,
-    )
-
-    real_delete_keys = vs_mod.delete_keys
-
-    def delete_then_crash(*a, **k):
-        real_delete_keys(*a, **k)
-        raise OSError("crash after table commit")
-
-    vs_mod.delete_keys = delete_then_crash
-    with _pytest.raises(OSError):
-        store.delete(["v5"])
-    vs_mod.delete_keys = real_delete_keys
-    assert store.fetch(["v5"]).count() == 0     # table committed
-    assert "v5" in stored_map()                 # map stale, but lagged
-    store.upsert([{"id": "heal2", "values": [0.0, 9.0, 0.0, 0.0]}])
-    m = stored_map()
-    assert "v5" not in m and m == recompute()
-
-
 def test_vector_store_where_composes_with_ivf_fast_path(spark, tmp_path):
     """r8: the metadata `where` filter must compose with the `_cell`
     fast-path probe (both predicates in ONE scan, filter-before-rank
@@ -771,8 +669,7 @@ def test_vector_store_where_composes_with_ivf_fast_path(spark, tmp_path):
     # filtered population (recall-1 check through the fast path)
     exact = store.query(q, top_k=4, mode="exact", where="src = 'web'").collect()
     assert [r["id"] for r in got] == [r["id"] for r in exact]
-    # and the fast path really ran: the probe pushes the table's
-    # `_cell`, not the map's `cell`
+    # and the fast path really ran: the probe pushes the table's `_cell`
     assert _ivf_probe_kind(hits) == "table"
 
     hy = store.query(
@@ -782,18 +679,53 @@ def test_vector_store_where_composes_with_ivf_fast_path(spark, tmp_path):
     assert len(hy) == 3 and all(r["src"] == "books" for r in hy)
 
 
-def test_vector_store_rebuild_crash_disables_cell_fast_path(spark, tmp_path):
-    """r8 self-review catch: a build_ivf crash BETWEEN its table
-    re-stamp and its map swap leaves NEW-quantizer cells in the rows
-    while the committed centroids are OLD — and a later ordinary
-    tick's catch-up makes the watermark current again, so the
-    watermark gate alone would let the `_cell` fast path probe
-    old-centroid cells against new-centroid row values (silent
-    recall loss). The rebuild-pending marker must keep the fast path
-    OFF (quantizer-consistent map-join fallback) across that whole
-    window, and a clean rebuild must clear it."""
-    import numpy as np
+def _assert_pending_rebuild_serves_exact(store, q, make_crash):
+    """Crash a build_ivf through ``make_crash`` (a wrapper around
+    ``upsert_parquet_partitioned``, the re-stamp commit), then check
+    the whole pending window: the marker survives an ordinary upsert,
+    ivf search pushes no `_cell` filter and equals exact search, and a
+    clean rebuild clears the marker and restores the `_cell` probe."""
+    import os as _os
+
     import pytest as _pytest
+
+    from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.sources import (
+        vector_store as vs_mod,
+    )
+
+    tpath = store._at("")
+    real = vs_mod.upsert_parquet_partitioned
+    vs_mod.upsert_parquet_partitioned = make_crash(real)
+    try:
+        with _pytest.raises(OSError):
+            store.build_ivf(k=3, iters=1)
+    finally:
+        vs_mod.upsert_parquet_partitioned = real
+    assert _os.path.exists(store._rebuild_pending_path(tpath))
+
+    # an ordinary tick stamps its rows under the new centroids but must
+    # not clear the marker: older rows may still carry old cells
+    store.upsert([{"id": "later", "values": [0.0, 9.0, 0.0, 0.0]}])
+    assert _os.path.exists(store._rebuild_pending_path(tpath))
+
+    hits = store.query(q, top_k=5, mode="ivf", n_probe=3)
+    assert _ivf_probe_kind(hits) == "none"
+    exact = [r["id"] for r in store.query(q, top_k=5, mode="exact").collect()]
+    assert [r["id"] for r in hits.collect()] == exact
+
+    store.build_ivf(k=3, iters=1)
+    assert not _os.path.exists(store._rebuild_pending_path(tpath))
+    hits2 = store.query(q, top_k=5, mode="ivf", n_probe=3)
+    assert _ivf_probe_kind(hits2) == "table"
+    assert [r["id"] for r in hits2.collect()] == exact
+
+
+def test_vector_store_rebuild_crash_disables_cell_fast_path(spark, tmp_path):
+    """r8 self-review catch: a build_ivf crash right AFTER its row
+    re-stamp commits — before it removes the pending marker — must
+    keep the `_cell` probe off until a build completes cleanly. The
+    marker is the only record that the build did not finish."""
+    import numpy as np
 
     from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.sources.vector_store import (
         VectorStore,
@@ -807,10 +739,9 @@ def test_vector_store_rebuild_crash_disables_cell_fast_path(spark, tmp_path):
         for i in range(30)
     ])
     store.build_ivf(k=3, iters=1)
-    tpath = store._at("")
     q = [float(x) for x in rng.randn(dim)]
 
-    # sanity: clean build serves through the fast path (no map join)
+    # sanity: clean build serves through the `_cell` probe
     assert _ivf_probe_kind(store.query(q, top_k=5, mode="ivf", n_probe=3)) == "table"
 
     # grow the corpus, then CRASH a rebuild after its table re-stamp
@@ -818,39 +749,12 @@ def test_vector_store_rebuild_crash_disables_cell_fast_path(spark, tmp_path):
         {"id": f"w{i}", "values": [float(x) for x in rng.randn(dim)]}
         for i in range(10)
     ])
-    real_commit = store._commit_ivf_map
-    store._commit_ivf_map = lambda *a, **k: (_ for _ in ()).throw(OSError("crash"))
-    with _pytest.raises(OSError):
-        store.build_ivf(k=3, iters=1)
-    store._commit_ivf_map = real_commit
-    import os as _os
-    assert _os.path.exists(store._rebuild_pending_path(tpath))
-
-    # an ordinary tick heals the WATERMARK (its catch-up path) — the
-    # dangerous state the marker exists for
-    store.upsert([{"id": "later", "values": [0.0, 9.0, 0.0, 0.0]}])
-    assert store._ivf_map_ver(store._ivf_map_path(tpath)) == store._current_version(tpath)
-
-    # fast path must STILL be off: the executed plan joins the map
-    hits = store.query(q, top_k=5, mode="ivf", n_probe=3)
-    # the fallback probes the MAP's `cell` column, never the table's
-    assert _ivf_probe_kind(hits) == "map"
-    # and with every cell probed, results equal exact search — the
-    # fallback is quantizer-consistent even mid-window
-    exact = [r["id"] for r in store.query(q, top_k=5, mode="exact").collect()]
-    assert [r["id"] for r in hits.collect()] == exact
-
-    # a clean rebuild clears the marker and restores the fast path
-    store.build_ivf(k=3, iters=1)
-    assert not _os.path.exists(store._rebuild_pending_path(tpath))
-    hits2 = store.query(q, top_k=5, mode="ivf", n_probe=3)
-    assert _ivf_probe_kind(hits2) == "table"
-    assert [r["id"] for r in hits2.collect()] == exact
+    _assert_pending_rebuild_serves_exact(store, q, _commit_then_crash)
 
 
 def test_vector_store_stats_include_cells(spark, tmp_path):
     """r8: stats(include_cells=True) reports the maintained IVF
-    occupancy from the committed map — totals match the corpus, stay
+    occupancy from the rows' `_cell` — totals match the corpus, stay
     fresh across upsert/delete, and the flag is a no-op without a
     built index."""
     import numpy as np
@@ -903,18 +807,13 @@ def test_vector_store_fetch_large_batch_semijoin(spark, tmp_path):
 
 
 def test_vector_store_rebuild_crash_before_rewrite(spark, tmp_path):
-    """Completing the rebuild-crash matrix: a crash AFTER the pending
-    marker but BEFORE the table re-stamp commits leaves table, cells,
-    and map all on the old quantizer — the conservative gate still
-    disables the fast path (marker present), the fallback serves
-    correct old-quantizer results, and a clean rebuild restores the
-    fast path."""
+    """Completing the rebuild-crash matrix: a crash AFTER the new
+    centroids are written but BEFORE the row re-stamp commits leaves
+    rows on the old quantizer under new committed centroids — the
+    pending marker keeps the `_cell` probe off (exact-scan fallback)
+    until a clean rebuild restores it."""
     import numpy as np
-    import pytest as _pytest
 
-    from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.sources import (
-        vector_store as vs_mod,
-    )
     from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.sources.vector_store import (
         VectorStore,
     )
@@ -926,26 +825,11 @@ def test_vector_store_rebuild_crash_before_rewrite(spark, tmp_path):
         for i in range(25)
     ])
     store.build_ivf(k=3, iters=1)
-    tpath = store._at("")
     q = [float(x) for x in rng.randn(4)]
 
-    real_upsert = vs_mod.upsert_parquet_partitioned
+    def crash_before_commit(_real):
+        def crash(*a, **k):
+            raise OSError("crash before table rewrite")
+        return crash
 
-    def crash(*a, **k):
-        raise OSError("crash before table rewrite")
-
-    vs_mod.upsert_parquet_partitioned = crash
-    with _pytest.raises(OSError):
-        store.build_ivf(k=3, iters=1)
-    vs_mod.upsert_parquet_partitioned = real_upsert
-    import os as _os
-    assert _os.path.exists(store._rebuild_pending_path(tpath))
-
-    hits = store.query(q, top_k=5, mode="ivf", n_probe=3)
-    assert _ivf_probe_kind(hits) == "map"
-    exact = [r["id"] for r in store.query(q, top_k=5, mode="exact").collect()]
-    assert [r["id"] for r in hits.collect()] == exact
-
-    store.build_ivf(k=3, iters=1)
-    assert not _os.path.exists(store._rebuild_pending_path(tpath))
-    assert _ivf_probe_kind(store.query(q, top_k=5, mode="ivf", n_probe=3)) == "table"
+    _assert_pending_rebuild_serves_exact(store, q, crash_before_commit)
