@@ -3237,12 +3237,17 @@ _DUCK_COS7 = (
     """,
 )
 def vec_knn_arrow_kernel(spark, sf_dir):
-    """Exact cosine top-k FORCING the Arrow numpy kernel (r9). The
-    production default is kernel='auto' (plan-stats gate), which
-    resolves to the HOF expression at the driver's sf0.01 gate scale —
-    so without this entry the kernel itself would never earn a driver
-    oracle row. Distinct parameters (query vector = row 7, k=15) keep
-    the result set independent of vec_knn_bruteforce's.
+    """Exact cosine top-k FORCING the scale kernel (r9; explode since the
+    Arrow cosine kernel was deleted). The name predates that deletion
+    and is kept because it is registered. The explode kernel tied the
+    Arrow kernel at sf10, ran 0.93x at sf1 and degrades half as much
+    under contention (PERFORMANCE.md Round-12), so cosine top-k keeps
+    only the two kernels its size gate picks. The production default is
+    kernel='auto' (plan-stats gate), which resolves to the HOF
+    expression at the driver's sf0.01 gate scale — so without this
+    entry the scale kernel would never earn a driver oracle row.
+    Distinct parameters (query vector = row 7, k=15) keep the result
+    set independent of vec_knn_bruteforce's.
 
     Rounding contract (r9 lesson): the raw cosine doubles are
     BIT-IDENTICAL across engines (sequential-fold order on both
@@ -3254,7 +3259,7 @@ def vec_knn_arrow_kernel(spark, sf_dir):
     sf0.001."""
     e = _t(spark, sf_dir, "embeddings")
     qvec = _query_vector(sf_dir, vec_id=7)
-    return vec_ops.cosine_topk(e, "vec_id", "embedding", qvec, k=15, kernel="arrow")
+    return vec_ops.cosine_topk(e, "vec_id", "embedding", qvec, k=15, kernel="explode")
 
 
 _DUCK_COS3 = (
@@ -5128,12 +5133,12 @@ def mm_frame_sample(spark, sf_dir):
 
 # The deterministic hashing featurizer (streaming.pipeline._hash_featurize,
 # the model-free fallback for U1) is SQL-expressible: per whitespace token,
-# h = int(md5(tok)[:15 hex], 16) — 60 bits, so (h >> 60) & 1 is always 0 and
-# the scatter sign is always -1 — bucket h % 384, normalize. The DuckDB
-# replica below was verified BIT-EXACT against the numpy kernel at the
-# float32 level (200/200 docs, every nonzero component) before these two
-# queries gained hash-checked oracles (VERDICT r10 task 2: the registry's
-# last no_oracle entries). When sentence_transformers IS importable the
+# h = int(md5(tok)[:15 hex], 16), scatter -1 into bucket h % 384, normalize
+# (every component is -count/||count||). The DuckDB replica below was
+# verified BIT-EXACT against the numpy kernel at the float32 level
+# (200/200 docs, every nonzero component) before these two queries
+# gained hash-checked oracles (VERDICT r10 task 2: the registry's last
+# no_oracle entries). When sentence_transformers IS importable the
 # UDF switches to the real model and these oracles no longer apply — the
 # import-gated test in tests/test_streaming.py covers that path.
 _EMBED_FALLBACK_COMPONENTS_SQL = r"""

@@ -105,24 +105,37 @@ def scratch_dir(input_bytes: int) -> str | None:
     return None
 
 
-def sized_session(sf_dir: str, app_name: str = "bench"):
-    """The benchmark session policy, shared by bench.py and
-    tools/ab.py so A/B ratios always measure under the configuration
-    the bench records: size the session to the data, same policy a
-    cluster deploy uses — small (<64 MiB on disk, the sf0.1 regime)
-    inputs get shuffle partitions = cores and AQE off (its stage
-    materialization barriers dominate tens-of-MB queries; measured
-    ~30% there). From ~sf1 up (the r6 cross-scale fixtures, 168 MB)
-    AQE pays for itself: q5 -34%, minhash -19% interleaved — the
-    skew/replan value starts existing, so the threshold sits between
-    the two measured regimes, not at 1 GiB. The r4 drop to 4
-    partitions was re-measured interleaved in r5 and lost ~8-18%
-    across the headline set vs matching cores (PERFORMANCE.md r5)."""
-    input_bytes = sum(
-        os.path.getsize(os.path.join(r, f))
-        for r, _d, fs in os.walk(sf_dir)
-        for f in fs
+def dir_bytes(path: str) -> int:
+    """Apparent on-disk size of every file under ``path`` — the input
+    size the session policy keys on."""
+    return sum(
+        os.path.getsize(os.path.join(r, f)) for r, _d, fs in os.walk(path) for f in fs
     )
+
+
+def size_regime(spark, input_bytes: int) -> dict[str, str | None]:
+    """The benchmark's ONE session-sizing policy: set every regime conf
+    for an input of ``input_bytes``, and unset (back to Spark's
+    default) each one the regime leaves alone, so calling it for a
+    smaller input after a larger one leaves no conf of the larger
+    regime behind. Returns the applied map (None = unset). Called by
+    :func:`sized_session` and by each scale block of :func:`main`, so
+    tools/ab.py and the other tools that build their session through
+    ``sized_session`` measure under the configuration the bench
+    records. Same policy a cluster deploy uses — size the session to
+    the data:
+
+    - small (<64 MiB on disk, the sf0.1 regime): shuffle partitions 16
+      and AQE off (its stage materialization barriers dominate
+      tens-of-MB queries; measured ~30% there);
+    - large (>=64 MiB): data-derived shuffle width, split size and
+      broadcast thresholds;
+    - >=1 GiB additionally turns AQE on, prefers shuffled-hash joins
+      and sizes AQE's coalesce granularity.
+
+    ``$SPARK_GRAFT_SHUFFLE`` overrides the shuffle width in every
+    regime; ``$SPARK_GRAFT_CPUS`` (default 32) is the core count the
+    split and coalesce sizes divide by."""
     small = input_bytes < 64 * 1024 * 1024
     # AQE boundary re-measured late r8: with the shuffle width now
     # data-derived (~8 MiB/partition) instead of a fixed 64, AQE OFF
@@ -134,7 +147,7 @@ def sized_session(sf_dir: str, app_name: str = "bench"):
     # on (skew splits / runtime re-plans are the 100 TB safety net —
     # get_spark's default).
     aqe = input_bytes >= 1024 * 1024 * 1024
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     # local[8] vs local[32] was A/B'd twice in r6 and is host-noise:
     # one interleaved window favored 8 by ~15%, the next favored 32 —
     # the default stays at the machine's cores ($SPARK_GRAFT_CPUS).
@@ -154,13 +167,97 @@ def sized_session(sf_dir: str, app_name: str = "bench"):
     # join_outer -26%; AQE's coalescing does not recover the initial
     # width's scheduling overhead). ~8 MiB of input per partition,
     # clamped to [16, 256]; a real cluster deploy sizes this to cores.
-    large_shuffle = max(16, min(256, input_bytes // (8 * 1024 * 1024)))
+    width = 16 if small else max(16, min(256, input_bytes // (8 * 1024 * 1024)))
+    # Split-size policy for the large regime (r8, retuned r9): the
+    # sf1 fixture files hold ~10 row groups each but fit inside
+    # one default 128 MiB partition, so every scan ran 1 task.
+    # r8 targeted ~6 splits/core of the TOTAL input (1 MiB at
+    # sf1), which halved the embedding-heavy family vs the
+    # single-task default; the r9 re-sweep ({1,2,4,16} MiB,
+    # min-of-3 per query) found 2 MiB at-or-near-best across the
+    # headline (q1 0.195 vs 0.220, cdc_snapshot 0.221 vs 0.324,
+    # minhash 0.341 vs 0.413, subset total -12%) at the cost of
+    # +13% on non-headline dedup_embedding_neardup (1.10 -> 1.25;
+    # its giant-array rows want the narrowest splits). Target is
+    # now ~3 splits/core. Degrades to the 128 MiB default as
+    # input grows (~24 GiB), so it is a small-data compensation,
+    # not a scale policy.
+    split = min(128 * 1024 * 1024, max(1 << 20, input_bytes // (3 * cpus)))
+    # AQE coalesce granularity (r11, VERDICT r10 task 4): the
+    # 64 MiB advisory default coalesces the post-SHJ stages of
+    # the fact-fact joins to a handful of partitions on this
+    # 32-core box — q3's li⋈o join stage (measured to BE the
+    # whole query: join-only arm 2.18 s of the 2.28 s total at
+    # sf10; scans are 0.79 s) ran underparallelized. Sized like
+    # the shuffle width: ~input/(8*cores), clamped [4, 64] MiB
+    # — sf10 lands ~6 MiB. Interleaved min-of-3 at sf10:
+    # q3 2.10 -> 1.72 (-18%), q5 2.63 -> 2.17 (-18%), q19
+    # flat; the 64 MiB ceiling keeps real-cluster deploys at
+    # the standard setting as input grows.
+    advisory = min(64 << 20, max(4 << 20, input_bytes // (8 * cpus)))
+    confs = {
+        "spark.sql.adaptive.enabled": "true" if aqe else "false",
+        "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_SHUFFLE", str(width)),
+        "spark.sql.files.maxPartitionBytes": None if small else str(split),
+        # Broadcast-threshold policy for the large regime (r9): the
+        # static estimator prices a broadcast by its pruned-column
+        # bytes, but the real cost is the SERIAL driver-side
+        # HashedRelation build — q5's plan was statically
+        # broadcasting 1.5M pruned orders rows (~6 MB estimate,
+        # under the 10 MB default) and paying ~0.3 s of single-thread
+        # build per execution. The per-query threshold sweep at sf1
+        # ({1,2,4,10} MiB, min-of-3 interleaved): 4 MiB is the
+        # plateau — q5 0.506 vs 0.806 (-37%), q3 0.435 vs 0.691
+        # (-37%), with q19/window_rank/join_outer keeping their
+        # genuinely-cheap dim broadcasts (1 MiB collapses q19 0.945
+        # vs 0.211 by shuffling the part join). Scale-safe direction:
+        # a LOWER static threshold is the conservative choice on a
+        # cluster (broadcast cost multiplies by executor count), and
+        # in the >=1 GiB regime AQE re-promotes genuinely small
+        # runtime sides to broadcast from actual sizes.
+        "spark.sql.autoBroadcastJoinThreshold": None if small else str(4 << 20),
+        # ADAPTIVE broadcast threshold (r9, the sf10 scale check): the
+        # 4 MiB static value — tuned at sf1 where AQE is OFF — also
+        # capped AQE's runtime re-promotion in the >=1 GiB regime, so
+        # at sf10 the genuinely-cheap customer/part dim broadcasts
+        # fell back to sort-merge joins that shuffled all 60M
+        # lineitem rows: q3 grew 18x and q19 22x for 10x the data.
+        # AQE prices with runtime-accurate sizes (the static
+        # mis-estimate that motivated 4 MiB cannot recur), so its
+        # threshold follows the standard cluster setting instead.
+        # sf10 sweep ({4,16,32,64} MiB, min-of-3 interleaved):
+        # 32 MiB is the plateau — q3 8.5 -> 2.95 s, q19 5.8 -> 2.54,
+        # q5/controls flat; 64 regresses q3 (a 40+ MB broadcast build
+        # starts costing again). Inert below 1 GiB (AQE off there).
+        "spark.sql.adaptive.autoBroadcastJoinThreshold": None if small else str(32 << 20),
+        # Shuffled-hash over sort-merge in the >=1 GiB regime (r9,
+        # sf10): the lineitem⋈orders equi-joins pay two large sorts
+        # under SMJ; SHJ skips both. sf10 interleaved min-of-3:
+        # q3 3.52 -> 1.88 (-47%), q5 3.26 -> 2.15 (-34%), controls
+        # flat. At sf1 it is neutral-to-mixed (totals 3.25 vs 3.23,
+        # q5 worse), so it follows the AQE gate rather than 'not
+        # small'. Scale-safe: Spark still falls back to SMJ when the
+        # build side's stats exceed threshold x partitions, so a
+        # 100 TB build side can never be forced to hash-build.
+        "spark.sql.join.preferSortMergeJoin": "false" if aqe else None,
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": str(advisory) if aqe else None,
+    }
+    for k, v in confs.items():
+        if v is None:
+            spark.conf.unset(k)
+        else:
+            spark.conf.set(k, v)
+    return confs
+
+
+def sized_session(sf_dir: str, app_name: str = "bench"):
+    """The benchmark session, shared by bench.py and tools/ab.py so
+    A/B ratios always measure under the configuration the bench
+    records: the process-level settings below, then
+    :func:`size_regime` for ``sf_dir``'s input size."""
+    input_bytes = dir_bytes(sf_dir)
     spark = get_spark(
         app_name,
-        shuffle_partitions=int(
-            os.environ.get("SPARK_GRAFT_SHUFFLE", "16" if small else str(large_shuffle))
-        ),
-        adaptive=aqe,
         local_dir=scratch_dir(input_bytes),
         # Throughput collector for the batch driver JVM (r9): G1 (the
         # JDK default) optimizes pause latency, which a benchmark/ETL
@@ -178,84 +275,7 @@ def sized_session(sf_dir: str, app_name: str = "bench"):
     # subset (join_outer -12.6%, cdc_incremental -4.8%), neutral on
     # small results. Runtime conf, safe on a live session.
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "131072")
-    if not small:
-        # Split-size policy for the large regime (r8, retuned r9): the
-        # sf1 fixture files hold ~10 row groups each but fit inside
-        # one default 128 MiB partition, so every scan ran 1 task.
-        # r8 targeted ~6 splits/core of the TOTAL input (1 MiB at
-        # sf1), which halved the embedding-heavy family vs the
-        # single-task default; the r9 re-sweep ({1,2,4,16} MiB,
-        # min-of-3 per query) found 2 MiB at-or-near-best across the
-        # headline (q1 0.195 vs 0.220, cdc_snapshot 0.221 vs 0.324,
-        # minhash 0.341 vs 0.413, subset total -12%) at the cost of
-        # +13% on non-headline dedup_embedding_neardup (1.10 -> 1.25;
-        # its giant-array rows want the narrowest splits). Target is
-        # now ~3 splits/core. Degrades to the 128 MiB default as
-        # input grows (~24 GiB), so it is a small-data compensation,
-        # not a scale policy.
-        mpb = min(128 * 1024 * 1024, max(1 << 20, input_bytes // (3 * int(cpus))))
-        spark.conf.set("spark.sql.files.maxPartitionBytes", str(mpb))
-        # Broadcast-threshold policy for the large regime (r9): the
-        # static estimator prices a broadcast by its pruned-column
-        # bytes, but the real cost is the SERIAL driver-side
-        # HashedRelation build — q5's plan was statically
-        # broadcasting 1.5M pruned orders rows (~6 MB estimate,
-        # under the 10 MB default) and paying ~0.3 s of single-thread
-        # build per execution. The per-query threshold sweep at sf1
-        # ({1,2,4,10} MiB, min-of-3 interleaved): 4 MiB is the
-        # plateau — q5 0.506 vs 0.806 (-37%), q3 0.435 vs 0.691
-        # (-37%), with q19/window_rank/join_outer keeping their
-        # genuinely-cheap dim broadcasts (1 MiB collapses q19 0.945
-        # vs 0.211 by shuffling the part join). Scale-safe direction:
-        # a LOWER static threshold is the conservative choice on a
-        # cluster (broadcast cost multiplies by executor count), and
-        # in the >=1 GiB regime AQE re-promotes genuinely small
-        # runtime sides to broadcast from actual sizes.
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(4 << 20))
-        # ADAPTIVE broadcast threshold (r9, the sf10 scale check): the
-        # 4 MiB static value — tuned at sf1 where AQE is OFF — also
-        # capped AQE's runtime re-promotion in the >=1 GiB regime, so
-        # at sf10 the genuinely-cheap customer/part dim broadcasts
-        # fell back to sort-merge joins that shuffled all 60M
-        # lineitem rows: q3 grew 18x and q19 22x for 10x the data.
-        # AQE prices with runtime-accurate sizes (the static
-        # mis-estimate that motivated 4 MiB cannot recur), so its
-        # threshold follows the standard cluster setting instead.
-        # sf10 sweep ({4,16,32,64} MiB, min-of-3 interleaved):
-        # 32 MiB is the plateau — q3 8.5 -> 2.95 s, q19 5.8 -> 2.54,
-        # q5/controls flat; 64 regresses q3 (a 40+ MB broadcast build
-        # starts costing again). Inert below 1 GiB (AQE off there).
-        spark.conf.set(
-            "spark.sql.adaptive.autoBroadcastJoinThreshold", str(32 << 20)
-        )
-        # Shuffled-hash over sort-merge in the >=1 GiB regime (r9,
-        # sf10): the lineitem⋈orders equi-joins pay two large sorts
-        # under SMJ; SHJ skips both. sf10 interleaved min-of-3:
-        # q3 3.52 -> 1.88 (-47%), q5 3.26 -> 2.15 (-34%), controls
-        # flat. At sf1 it is neutral-to-mixed (totals 3.25 vs 3.23,
-        # q5 worse), so it follows the AQE gate rather than 'not
-        # small'. Scale-safe: Spark still falls back to SMJ when the
-        # build side's stats exceed threshold x partitions, so a
-        # 100 TB build side can never be forced to hash-build.
-        if aqe:
-            spark.conf.set("spark.sql.join.preferSortMergeJoin", "false")
-            # AQE coalesce granularity (r11, VERDICT r10 task 4): the
-            # 64 MiB advisory default coalesces the post-SHJ stages of
-            # the fact-fact joins to a handful of partitions on this
-            # 32-core box — q3's li⋈o join stage (measured to BE the
-            # whole query: join-only arm 2.18 s of the 2.28 s total at
-            # sf10; scans are 0.79 s) ran underparallelized. Sized like
-            # the shuffle width: ~input/(8*cores), clamped [4, 64] MiB
-            # — sf10 lands ~6 MiB. Interleaved min-of-3 at sf10:
-            # q3 2.10 -> 1.72 (-18%), q5 2.63 -> 2.17 (-18%), q19
-            # flat; the 64 MiB ceiling keeps real-cluster deploys at
-            # the standard setting as input grows.
-            advisory = min(
-                64 << 20, max(4 << 20, input_bytes // (8 * int(cpus)))
-            )
-            spark.conf.set(
-                "spark.sql.adaptive.advisoryPartitionSizeInBytes", str(advisory)
-            )
+    size_regime(spark, input_bytes)
     return spark
 
 
@@ -375,21 +395,6 @@ def main() -> None:
     queries = entrymod.queries()
     warm_up(spark, sf_dir)
     errors: dict[str, str] = {}
-    # sf0.1-regime conf snapshot: the sf1/sf10 blocks mutate the AQE /
-    # shuffle / split confs in place, and the snapshot-cycle block at
-    # the end must run under the DRIVER-SCALE regime to be comparable
-    # across rounds (VERDICT r10 task 6)
-    _base_confs = {
-        k: spark.conf.get(k)
-        for k in (
-            "spark.sql.adaptive.enabled",
-            "spark.sql.shuffle.partitions",
-            "spark.sql.files.maxPartitionBytes",
-            "spark.sql.autoBroadcastJoinThreshold",
-            "spark.sql.join.preferSortMergeJoin",
-        )
-    }
-
     # Headline window at the driver scale factor: interleaved
     # Spark-vs-DuckDB per query (r8 verdict task 5 — the sf0.1 block
     # now records per-query DuckDB denominators, so per-query ratio
@@ -519,38 +524,7 @@ def main() -> None:
         # dir (interrupted gen_sf.py) must not discard the sf0.1
         # artifact already measured above (review catch r7)
         try:
-            # same large-regime policies sized_session applies (the
-            # session was built for sf0.1; re-size to sf1's input —
-            # AQE stays off below 1 GiB, see sized_session)
-            sf1_bytes = sum(
-                os.path.getsize(os.path.join(r, f))
-                for r, _d, fs in os.walk(sf1_dir)
-                for f in fs
-            )
-            spark.conf.set(
-                "spark.sql.adaptive.enabled",
-                "true" if sf1_bytes >= 1024 * 1024 * 1024 else "false",
-            )
-            spark.conf.set(
-                "spark.sql.shuffle.partitions",
-                str(max(16, min(256, sf1_bytes // (8 * 1024 * 1024)))),
-            )
-            cpus1 = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-            spark.conf.set(
-                "spark.sql.files.maxPartitionBytes",
-                str(min(128 * 1024 * 1024, max(1 << 20, sf1_bytes // (3 * cpus1)))),
-            )
-            # large-regime broadcast thresholds (see sized_session r9)
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(4 << 20))
-            spark.conf.set(
-                "spark.sql.adaptive.autoBroadcastJoinThreshold", str(32 << 20)
-            )
-            # SHJ preference follows the AQE gate (sized_session r9);
-            # reset in case the main block ran in a >=1 GiB regime
-            spark.conf.set(
-                "spark.sql.join.preferSortMergeJoin",
-                "false" if sf1_bytes >= 1024 * 1024 * 1024 else "true",
-            )
+            size_regime(spark, dir_bytes(sf1_dir))
             warm_up(spark, sf1_dir)
             con1, oracles1 = _duck(sf1_dir)
             t1, d1 = _measure_pair(
@@ -595,27 +569,7 @@ def main() -> None:
     sf10_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures", "sf10")
     if os.path.isdir(sf10_dir) and os.environ.get("SPARK_GRAFT_BENCH_SF10", "1") == "1":
         try:
-            sf10_bytes = sum(
-                os.path.getsize(os.path.join(r, f))
-                for r, _d, fs in os.walk(sf10_dir)
-                for f in fs
-            )
-            spark.conf.set("spark.sql.adaptive.enabled",
-                           "true" if sf10_bytes >= 1024 * 1024 * 1024 else "false")
-            spark.conf.set("spark.sql.shuffle.partitions",
-                           str(max(16, min(256, sf10_bytes // (8 * 1024 * 1024)))))
-            cpus10 = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-            spark.conf.set("spark.sql.files.maxPartitionBytes",
-                           str(min(128 * 1024 * 1024, max(1 << 20, sf10_bytes // (3 * cpus10)))))
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(4 << 20))
-            spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", str(32 << 20))
-            spark.conf.set("spark.sql.join.preferSortMergeJoin",
-                           "false" if sf10_bytes >= 1024 * 1024 * 1024 else "true")
-            # mirror sized_session's AQE coalesce granularity (r11)
-            spark.conf.set(
-                "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-                str(min(64 << 20, max(4 << 20, sf10_bytes // (8 * cpus10)))),
-            )
+            size_regime(spark, dir_bytes(sf10_dir))
             warm_up(spark, sf10_dir)
             con10, oracles10 = _duck(sf10_dir)
             t10, d10 = _measure_pair(
@@ -735,38 +689,7 @@ def main() -> None:
             # size the session for the chosen fixture explicitly (the
             # prior sf1/sf10 blocks may be disabled or absent, so the
             # live confs are not necessarily the right regime)
-            if sc_dir == sf_dir:
-                for k, v in _base_confs.items():
-                    spark.conf.set(k, v)
-            else:
-                sc_bytes = sum(
-                    os.path.getsize(os.path.join(r, f))
-                    for r, _d, fs in os.walk(sc_dir)
-                    for f in fs
-                )
-                sc_cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-                sc_aqe = sc_bytes >= 1024 * 1024 * 1024
-                spark.conf.set("spark.sql.adaptive.enabled",
-                               "true" if sc_aqe else "false")
-                spark.conf.set("spark.sql.shuffle.partitions",
-                               str(max(16, min(256, sc_bytes // (8 * 1024 * 1024)))))
-                spark.conf.set(
-                    "spark.sql.files.maxPartitionBytes",
-                    str(min(128 * 1024 * 1024,
-                            max(1 << 20, sc_bytes // (3 * sc_cpus)))),
-                )
-                spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(4 << 20))
-                spark.conf.set("spark.sql.join.preferSortMergeJoin",
-                               "false" if sc_aqe else "true")
-                if sc_aqe:
-                    spark.conf.set(
-                        "spark.sql.adaptive.autoBroadcastJoinThreshold",
-                        str(32 << 20),
-                    )
-                    spark.conf.set(
-                        "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-                        str(min(64 << 20, max(4 << 20, sc_bytes // (8 * sc_cpus)))),
-                    )
+            size_regime(spark, dir_bytes(sc_dir))
             # import by explicit path (ADVICE r11): a permanent
             # sys.path[0]=tools/ entry would let tools/ module names
             # (ab, windows, ...) shadow later imports process-wide

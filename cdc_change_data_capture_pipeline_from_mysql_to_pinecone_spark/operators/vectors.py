@@ -9,11 +9,16 @@ operator pair:
   baseline. One scan, one TakeOrderedAndProject (no global sort);
   at 100 TB this is the per-partition top-k + driver merge Spark
   already does for orderBy+limit.
-- ``hyperplane_buckets`` + ``ann_topk`` : random-hyperplane LSH — the
-  scale path. Docs hash to 2^n_planes buckets; a query probes only its
-  own bucket, cutting the scanned fraction by ~2^n while staying
-  deterministic (hyperplanes derive from the portable hash family, so
-  an external oracle can replay the bucketing).
+- ``hyperplane_buckets`` + ``ann_topk`` : random-hyperplane LSH, a
+  registry operator (the ``vec_*`` LSH queries and their oracles).
+  Docs hash to 2^n_planes buckets; a query probes only its own bucket,
+  cutting the scanned fraction by ~2^n while staying deterministic
+  (hyperplanes derive from the portable hash family, so an external
+  oracle can replay the bucketing).
+- ``train_ivf_centroids`` + ``ivf_assign`` : the IVF coarse quantizer.
+  It is the vector store's only ANN (``VectorStore.build_ivf`` /
+  ``query(mode='ivf')``), maintained on every upsert; LSH hashes every
+  stored vector at query time, which costs more than the exact scan.
 """
 
 from __future__ import annotations
@@ -25,24 +30,26 @@ from ..functions.vector import cosine_sim, lit_double_array
 
 
 #: Input-size gate for kernel='auto': below this optimizer size
-#: estimate the Python-worker round-trip costs more than interpreted
-#: HOF evaluation saves (measured interleaved: at sf0.1's 0.8 MiB
-#: embeddings the Arrow kernel LOSES 14-20%; at sf1's 8 MiB it ties on
-#: 1-dot cosine and wins -27% on 10-plane bucketing, growing with
-#: rows x ops/row). Unknown stats estimate as Long.MaxValue and take
-#: the Arrow side — the right default at scale, where the interpreted
-#: path is the 10x mistake.
+#: estimate a scale kernel's fixed cost exceeds what it saves over
+#: interpreted HOF evaluation (measured interleaved: at sf0.1's 0.8 MiB
+#: embeddings the Arrow kernel LOSES 14-20%; at sf1's 8 MiB it wins
+#: -27% on 10-plane bucketing, growing with rows x ops/row). Unknown
+#: stats estimate as Long.MaxValue and take the scale side — the right
+#: default at scale, where the interpreted path is the 10x mistake.
 ARROW_KERNEL_MIN_BYTES = 4 * 1024 * 1024
 
 
 def _resolve_kernel(df: DataFrame, kernel: str, scale_kernel: str = "arrow") -> str:
-    """'auto' -> ``scale_kernel`` above the size gate, 'hof' below it.
+    """'auto' -> ``scale_kernel`` above the size gate, 'hof' below it;
+    any kernel other than auto|hof|``scale_kernel`` is a ValueError.
     The scale kernel is per-operator: cosine scoring takes the JVM
     explode shape (r12: steady-state tie with Arrow at sf10, ~half
     the contention degradation, no Python worker — PERFORMANCE.md),
     LSH bucketing keeps the Arrow matmul (the 13-sum explode agg
     measured 24-59% WORSE at sf10 — one matmul beats thirteen
     grouped sums; PERFORMANCE.md Round-12 explode kernel)."""
+    if kernel not in ("auto", "hof", scale_kernel):
+        raise ValueError(f"kernel must be auto|hof|{scale_kernel}, got {kernel!r}")
     if kernel != "auto":
         return kernel
     size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
@@ -59,59 +66,48 @@ def cosine_topk(
 ) -> DataFrame:
     """Exact top-k by cosine similarity to a literal query vector.
 
-    Kernels (all produce bit-identical scores — same sequential fold;
+    Kernels (both produce bit-identical scores — same sequential fold;
     verified raw-equal at sf0.1/sf1/sf10, PERFORMANCE.md Round-12):
 
-    - ``'explode'`` (the scale default since r12): pure-JVM
+    - ``'explode'`` (the scale kernel since r12): pure-JVM
       posexplode + literal-lookup products + hash-agg sums — no
-      Python worker, no interpreted lambda. Steady-state TIE with the
-      Arrow kernel at sf10 (four-window record in PERFORMANCE.md);
-      chosen as default because it degrades ~half as much under
-      executor contention and drops the Python-worker subsystem
-      (worker pool, ~50 MB/query vector IPC) from the hot path at
-      equal speed.
-    - ``'arrow'``: Arrow-batched numpy kernel (one matmul per batch).
-      Kept for callers that want scoring as a COLUMN on the original
-      frame shape (no re-aggregation), and as the LSH kernel where
-      the explode form loses.
+      Python worker, no interpreted lambda. It tied the deleted Arrow
+      kernel at sf10 and ran 0.93x at sf1 (four-window record in
+      PERFORMANCE.md), and degrades ~half as much under executor
+      contention.
     - ``'hof'``: pure-expression form (the oracle mirror) — wins
-      under ARROW_KERNEL_MIN_BYTES where every batch mechanism's
-      fixed cost dominates.
+      under ARROW_KERNEL_MIN_BYTES where the explode shape's
+      aggregation costs more than it saves.
     - ``'auto'`` (default) picks ``'explode'`` above the size gate,
       ``'hof'`` below it (no job — optimizer size estimate).
 
+    Any other ``kernel`` raises ValueError.
+
     The plan ends in TakeOrderedAndProject either way — per-partition
     top-k + driver merge, no global sort, at any scale."""
-    resolved = _resolve_kernel(emb_df, kernel, scale_kernel="explode")
-    if resolved == "explode":
+    if _resolve_kernel(emb_df, kernel, scale_kernel="explode") == "explode":
         from ..functions.vector import cosine_scores_explode
 
         # Per-row uniquifier: cosine_scores_explode aggregates BY the id
         # columns, so a duplicated id would MERGE two vectors' elements
-        # into one garbage score — the row-scoring kernels would instead
-        # emit one row each. The _rid keeps per-row semantics identical
-        # across kernels for any input (only used as a grouping key,
-        # dropped before the contract columns; each group is still one
-        # row's contiguous elements, so the fold order is unchanged).
+        # into one garbage score — the HOF kernel would instead emit one
+        # row each. The _rid keeps per-row semantics identical across
+        # kernels for any input (only used as a grouping key, dropped
+        # before the contract columns; each group is still one row's
+        # contiguous elements, so the fold order is unchanged).
         scored = cosine_scores_explode(
             emb_df.withColumn("_rid", F.monotonically_increasing_id()),
             [id_col, "_rid"],
             vec_col,
             query_vec,
         )
-        return (
-            scored.select(F.col(id_col), F.round(F.col("score"), 6).alias("score"))
-            .orderBy(F.col("score").desc(), F.col(id_col))
-            .limit(k)
-        )
-    if resolved == "arrow":
-        from ..functions.vector import cosine_scores_arrow
-
-        score = cosine_scores_arrow(F.col(vec_col), query_vec)
     else:
-        score = cosine_sim(F.col(vec_col), lit_double_array(query_vec))
+        scored = emb_df.select(
+            F.col(id_col),
+            cosine_sim(F.col(vec_col), lit_double_array(query_vec)).alias("score"),
+        )
     return (
-        emb_df.select(F.col(id_col), F.round(score, 6).alias("score"))
+        scored.select(F.col(id_col), F.round(F.col("score"), 6).alias("score"))
         .orderBy(F.col("score").desc(), F.col(id_col))
         .limit(k)
     )
@@ -617,37 +613,22 @@ def ann_topk(
     query_vec: list[float],
     dim: int,
     k: int = 10,
-    n_planes: int | None = 4,
-    multi_probe: int = 0,
-    n_rows: int | None = None,
+    n_planes: int = 4,
 ) -> DataFrame:
     """Approximate top-k: hash the query with the same hyperplanes,
-    scan only its bucket, exact cosine within. ``multi_probe`` > 0
-    additionally probes the buckets at Hamming distance 1 obtained by
-    flipping the ``multi_probe`` lowest-|dot| (least confident) bits —
-    the standard recall/scan-fraction dial. ``n_planes=None``
-    auto-sizes from the corpus row count (memoized per application and
-    plan — pass ``n_rows`` for tables that mutate in-session)."""
-    if n_planes is None:
-        n_planes = planes_for_corpus(_corpus_rows(emb_df, n_rows))
+    scan only its bucket, exact cosine within. Callers size
+    ``n_planes`` to the corpus with :func:`planes_for_corpus`."""
     bucketed = hyperplane_buckets(emb_df, vec_col, dim, n_planes)
-    dots = []
     qb = 0
     for b in range(n_planes):
-        plane = _hyperplane(dim, b)
-        d = sum(x * y for x, y in zip(query_vec, plane))
-        dots.append((abs(d), b))
-        if d >= 0:
+        if sum(x * y for x, y in zip(query_vec, _hyperplane(dim, b))) >= 0:
             qb += 1 << b
-    probes = [qb]
-    for _absd, b in sorted(dots)[:multi_probe]:
-        probes.append(qb ^ (1 << b))
     # scoring stays the HOF expression: the bucket filter shrinks the
     # candidate set to ~target_bucket_size rows, where a Python-worker
     # round-trip always costs more than interpreted evaluation
     q = lit_double_array(query_vec)
     return (
-        bucketed.filter(F.col("bucket").isin(probes))
+        bucketed.filter(F.col("bucket") == qb)
         .select(F.col(id_col), F.round(cosine_sim(F.col(vec_col), q), 6).alias("score"))
         .orderBy(F.col("score").desc(), F.col(id_col))
         .limit(k)

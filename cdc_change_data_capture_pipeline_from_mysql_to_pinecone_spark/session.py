@@ -39,8 +39,10 @@ def get_spark(
     SparkEnv creation, so it only takes effect on the FIRST
     getOrCreate in the process; on a cluster this is the standard
     "scratch on the fastest local storage" deploy knob (NVMe; here a
-    tmpfs when it has headroom — see bench.sized_session, measured
-    -12% on the sf1 shuffle-heavy subset vs journaled-/tmp).
+    tmpfs when it has headroom — see bench.scratch_dir, measured
+    -12% on the sf1 shuffle-heavy subset vs journaled-/tmp). The
+    engine sets no data-size regime conf; the benchmark's one sizing
+    policy is bench.size_regime.
     NOTE: in one JVM the first getOrCreate pins the master for the
     process."""
     cpus = cores if cores is not None else os.environ.get("SPARK_GRAFT_CPUS", "32")

@@ -11,8 +11,10 @@ surface over the engine's machinery, so "switching" is literal:
   rewriting only touched buckets, crash-safe atomic swaps,
   auto-sized + auto-regrowing bucket count;
 - query    = operators.vectors: exact cosine top-k
-  (TakeOrderedAndProject — never a global sort) or hyperplane-LSH ANN
-  with corpus-adaptive plane count and optional multi-probe;
+  (TakeOrderedAndProject — never a global sort), the maintained IVF
+  index as the one ANN path (``build_ivf`` once, then every
+  upsert/delete keeps each row's ``_cell`` fresh), or hybrid
+  vector+BM25 fusion;
 - fetch    = bucket-pruned point lookups (only the partitions the
   requested ids hash into are read);
 - delete   = the verb the reference's pipeline lacks entirely
@@ -358,7 +360,6 @@ class VectorStore:
         vector: list[float],
         top_k: int = 10,
         mode: str = "exact",
-        multi_probe: int = 0,
         query_terms: list[str] | None = None,
         text_col: str = "metadata",
         rrf_k: int = 60,
@@ -367,24 +368,24 @@ class VectorStore:
         n_probe: int = 2,
     ) -> DataFrame:
         """Top-k most-cosine-similar records. ``mode='exact'`` scans
-        everything through a TakeOrderedAndProject; ``mode='ann'``
-        probes the query's LSH bucket(s) — the scan-fraction dial for
-        an index that outgrew exact search; ``mode='ivf'`` probes the
-        ``n_probe`` nearest cells of the MAINTAINED IVF index
-        (build_ivf once, then every upsert/delete keeps it fresh):
-        the probe filters the table's own cell-clustered ``_cell``
-        column, so both the decoded bytes (row-group pruning on the
-        pushed ``IN`` predicate) and the cosine compute are
-        ~n_probe/k of the corpus; recall grows with n_probe, exact
-        cosine within the probed cells. While a rebuild is pending
-        (a build_ivf crashed between its centroid write and its row
-        re-stamp) ``mode='ivf'`` serves an exact scan instead — never
-        worse recall. ``mode='hybrid'`` fuses
-        the exact vector ranking with a BM25 lexical ranking of
-        ``query_terms`` over ``text_col`` by reciprocal-rank fusion
-        (the hybrid-search verb of hosted vector stores): each
-        retriever contributes its top-4k candidates, fusion needs no
-        score calibration, and the returned ``score`` is the RRF sum.
+        everything through a TakeOrderedAndProject; ``mode='ivf'``,
+        the store's ANN, probes the ``n_probe`` nearest cells of the
+        MAINTAINED IVF index (build_ivf once, then every upsert/delete
+        keeps it fresh): the probe filters the table's own
+        cell-clustered ``_cell`` column, so both the decoded bytes
+        (row-group pruning on the pushed ``IN`` predicate) and the
+        cosine compute are ~n_probe/k of the corpus; recall grows with
+        n_probe, exact cosine within the probed cells. While a rebuild
+        is pending (a build_ivf crashed between its centroid write and
+        its row re-stamp) ``mode='ivf'`` serves an exact scan instead —
+        never worse recall. There is no LSH mode: hashing every stored
+        vector at query time cost more than the exact scan.
+        ``mode='hybrid'`` fuses the exact vector ranking with a BM25
+        lexical ranking of ``query_terms`` over ``text_col`` by
+        reciprocal-rank fusion (the hybrid-search verb of hosted vector
+        stores): each retriever contributes its top-4k candidates,
+        fusion needs no score calibration, and the returned ``score``
+        is the RRF sum.
 
         ``where`` is a SQL predicate over the record's columns (the
         hosted API's metadata filter, e.g. ``"meta.source = 'web'"``),
@@ -392,26 +393,14 @@ class VectorStore:
         displace matches from the top-k, which post-filtering the hit
         list would get wrong. The predicate is applied up front in
         every mode — in exact/hybrid it rides the scan (pushdown); in
-        ann mode it composes with the bucket probe inside one scan
-        (bucket assignment depends only on the vector, so pre- vs
-        post-probe filtering is plan-equivalent, and pre lets Catalyst
-        push both predicates down together)."""
+        ivf mode it composes with the ``_cell`` probe inside one scan,
+        so Catalyst pushes both predicates down together."""
         t = self._table(namespace)
         if where is not None:
             t = t.filter(where)
         probe = self._ivf_probe(namespace, t, vector, n_probe) if mode == "ivf" else None
         if mode == "exact" or (mode == "ivf" and probe is None):
             hits = vec_ops.cosine_topk(t, "id", "values", vector, k=top_k)
-        elif mode == "ann":
-            # one marker read — stats('') would also build the whole
-            # per-namespace breakdown (a listdir + read per namespace)
-            # on every ANN query
-            _n, row_count = _read_marker(self._at(namespace))
-            hits = vec_ops.ann_topk(
-                t, "id", "values", vector, dim=self.dim, k=top_k,
-                n_planes=None, multi_probe=multi_probe,
-                n_rows=row_count or 0,
-            )
         elif mode == "ivf":
             from ..functions.vector import cosine_sim, lit_double_array
 
@@ -450,7 +439,7 @@ class VectorStore:
                 .select("id", F.col("rrf_score").alias("score"))
             )
         else:
-            raise ValueError(f"mode must be exact|ann|ivf|hybrid, got {mode!r}")
+            raise ValueError(f"mode must be exact|ivf|hybrid, got {mode!r}")
         meta = [c for c in t.columns if c not in ("values", "kbucket", "_ver", "_cell")]
         # the metadata join does not preserve the top-k order — restore
         # it (k rows; the sort is driver-trivial)

@@ -72,15 +72,16 @@ def _load_model():
 
 def _hash_featurize(texts: list[str]) -> np.ndarray:
     """Deterministic 384-dim unit-vector featurizer (model-free
-    fallback): token hashes scatter-add into the vector. Preserves
-    the contract cos(v,v)=1, dim=384, batch-vectorized."""
+    fallback): each token's 60-bit md5 prefix subtracts 1 from
+    component ``h % 384``, then rows are L2-normalized. Preserves the
+    contract cos(v,v)=1, dim=384, batch-vectorized."""
     import hashlib
 
     out = np.zeros((len(texts), EMBED_DIM), dtype=np.float64)
     for i, t in enumerate(texts):
         for tok in (t or "").split():
             h = int(hashlib.md5(tok.encode()).hexdigest()[:15], 16)
-            out[i, h % EMBED_DIM] += 1.0 if (h >> 60) & 1 else -1.0
+            out[i, h % EMBED_DIM] -= 1.0
     norms = np.linalg.norm(out, axis=1, keepdims=True)
     norms[norms == 0] = 1.0
     return out / norms

@@ -172,7 +172,8 @@ def test_sized_session_large_regime_policies(spark, tmp_path):
     sf10), and shuffled-hash must be preferred over sort-merge. A
     sparse file gives the regime without 1.7 GB of fixture data —
     sized_session sizes off os.path.getsize, which reports apparent
-    size."""
+    size. Then the policy is called for the sf0.1 input by byte count
+    (no data): every regime conf must be what that call alone sets."""
     import bench
 
     big = tmp_path / "sparse.parquet"
@@ -185,17 +186,26 @@ def test_sized_session_large_regime_policies(spark, tmp_path):
     assert s.conf.get("spark.sql.join.preferSortMergeJoin") == "false"
     # width = bytes/8MiB clamped to [16,256]; 2 GiB hits the clamp
     assert s.conf.get("spark.sql.shuffle.partitions") == "256"
+
+    # one policy for every regime: sizing for the sf0.1 input after
+    # the >=1 GiB one leaves every regime conf exactly as sizing for
+    # sf0.1 alone does — nothing of the large regime lingers
+    sf01_bytes = 17_508_506  # on-disk size of the sf0.1 fixture
+    big_confs = bench.size_regime(s, 2 * 1024 * 1024 * 1024)
+    after_big = bench.size_regime(s, sf01_bytes)
+    assert set(after_big) == set(big_confs)
+    got = {k: s.conf.get(k) for k in after_big}
+    for k in after_big:
+        s.conf.unset(k)
+    bench.size_regime(s, sf01_bytes)
+    assert got == {k: s.conf.get(k) for k in after_big}
+    assert got["spark.sql.adaptive.enabled"] == "false"
+    assert got["spark.sql.join.preferSortMergeJoin"] == "true"  # Spark default
+
     # restore the shared session's small-regime-ish defaults for
     # whatever test runs next (sized_session mutates the singleton)
-    for k in ("spark.sql.autoBroadcastJoinThreshold",
-              "spark.sql.adaptive.autoBroadcastJoinThreshold",
-              "spark.sql.join.preferSortMergeJoin",
-              "spark.sql.files.maxPartitionBytes",
-              "spark.sql.execution.arrow.maxRecordsPerBatch"):
-        try:
-            s.conf.unset(k)
-        except Exception:
-            pass
+    for k in list(after_big) + ["spark.sql.execution.arrow.maxRecordsPerBatch"]:
+        s.conf.unset(k)
     s.conf.set("spark.sql.adaptive.enabled", "true")
     s.conf.set("spark.sql.shuffle.partitions", "32")
 

@@ -587,14 +587,15 @@ def test_explode_cosine_kernel_bit_matches_hof_fold(spark_g, vecs, dim):
     """The r12 JVM explode cosine kernel's bit-exactness claim is
     STRUCTURAL (exploded elements fold in pos order inside the partial
     hash aggregate); this pins it over random vectors, not just the
-    fixture: raw doubles equal the Arrow kernel's sequential fold
-    exactly, including NULL vectors (NULL score) and ragged/empty
-    vectors. Vectors are truncated/padded to a common dim because the
-    kernels' contract is uniform-dim input; empties stay empty to keep
-    the zero-norm branch covered."""
+    fixture: raw doubles equal the HOF ``cosine_sim`` fold exactly,
+    including NULL vectors (NULL score) and ragged/empty vectors.
+    Vectors are truncated/padded to a common dim because the kernels'
+    contract is uniform-dim input; empties stay empty to keep the
+    zero-norm branch covered."""
     from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.functions.vector import (
-        cosine_scores_arrow,
         cosine_scores_explode,
+        cosine_sim,
+        lit_double_array,
     )
 
     shaped = [
@@ -608,7 +609,8 @@ def test_explode_cosine_kernel_bit_matches_hof_fold(spark_g, vecs, dim):
     a = {
         r["vec_id"]: r["score"]
         for r in df.select(
-            "vec_id", cosine_scores_arrow(F.col("embedding"), q).alias("score")
+            "vec_id",
+            cosine_sim(F.col("embedding"), lit_double_array(q)).alias("score"),
         ).collect()
     }
     x = {

@@ -138,7 +138,7 @@ def test_streaming_into_vector_connector(spark, sf_dir, tmp_path):
 
 
 def test_vector_store_facade_end_to_end(spark, tmp_path):
-    """The reference-shaped index API: upsert -> query(exact & ann) ->
+    """The reference-shaped index API: upsert -> query(exact) ->
     fetch -> overwrite-by-id -> delete, with stats maintained and the
     self-query always ranking itself first."""
     import numpy as np
@@ -162,9 +162,9 @@ def test_vector_store_facade_end_to_end(spark, tmp_path):
     top = store.query(q, top_k=3).collect()
     assert top[0]["id"] == "doc7" and top[0]["metadata"] == "m7"
     assert abs(top[0]["score"] - 1.0) < 1e-6
-
-    ann = store.query(q, top_k=3, mode="ann", multi_probe=1).collect()
-    assert ann and ann[0]["id"] == "doc7"
+    # the maintained IVF is the store's only ANN: no LSH mode
+    with pytest.raises(ValueError, match=r"exact\|ivf\|hybrid"):
+        store.query(q, top_k=3, mode="ann")
 
     got = {r["id"] for r in store.fetch(["doc3", "doc9", "nope"]).collect()}
     assert got == {"doc3", "doc9"}
@@ -350,7 +350,8 @@ def test_vector_store_query_metadata_filter(spark, tmp_path):
     """The hosted API's metadata filter: a `where` predicate restricts
     the candidate set BEFORE ranking, so the top-k comes entirely from
     matching records (post-filtering a hit list would instead return
-    fewer than k); works in exact and ann modes."""
+    fewer than k). The ivf mode's filter is covered by
+    test_vector_store_where_composes_with_ivf_fast_path."""
     from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.sources.vector_store import (
         VectorStore,
     )
@@ -370,8 +371,6 @@ def test_vector_store_query_metadata_filter(spark, tmp_path):
     hits = store.query(q, top_k=3, where="src = 'web'").collect()
     assert len(hits) == 3 and all(r["src"] == "web" for r in hits)
     assert hits[0]["id"] == "w0"
-    ann = store.query(q, top_k=2, mode="ann", where="src = 'web'").collect()
-    assert ann and all(r["src"] == "web" for r in ann)
 
 
 def test_vector_store_maintained_ivf(spark, tmp_path):

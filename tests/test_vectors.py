@@ -1,11 +1,13 @@
 """Vector-operator tests beyond the oracles: k-means IVF training
-convergence/determinism, multi-probe LSH recall."""
+convergence/determinism, kernel agreement (explode vs HOF cosine, Arrow
+vs HOF LSH buckets)."""
 
 from __future__ import annotations
 
 import os
 import sys
 
+import pytest
 from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -34,25 +36,6 @@ def test_kmeans_training_is_deterministic_and_improves(spark, sf_dir):
     assigned = vec_ops.ivf_assign(e, "vec_id", "embedding", c1)
     assert assigned.count() == e.count()
     assert assigned.select("cell").distinct().count() <= 8
-
-
-def test_multi_probe_recall_superset(spark, sf_dir):
-    """Multi-probe must return >= the single-bucket result set quality:
-    its top-k scores dominate the single-probe top-k scores."""
-    e = load_table(spark, sf_dir, "embeddings")
-    q = _query_vec(spark, sf_dir)
-    single = vec_ops.ann_topk(e, "vec_id", "embedding", q, dim=64, k=10, n_planes=4)
-    multi = vec_ops.ann_topk(
-        e, "vec_id", "embedding", q, dim=64, k=10, n_planes=4, multi_probe=2
-    )
-    s = [r["score"] for r in single.collect()]
-    m = [r["score"] for r in multi.collect()]
-    assert len(m) >= len(s)
-    for ms, ss in zip(m, s):
-        assert ms >= ss - 1e-9  # pointwise domination of the ranked lists
-    # exact-vs-ann sanity: multi-probe top-1 equals brute-force top-1
-    brute = vec_ops.cosine_topk(e, "vec_id", "embedding", q, k=1).collect()[0]
-    assert multi.collect()[0]["vec_id"] == brute["vec_id"]
 
 
 def test_ivf_assign_broadcast_path_matches_literal(spark, sf_dir):
@@ -302,96 +285,82 @@ def test_pca_deflation_recovers_two_planted_directions(spark):
     assert abs(float(np.dot(vs[0], vs[1]))) < 1e-6
 
 
-def test_map_arrow_kernels_bit_match_pandas_kernels(spark, sf_dir):
-    """The mapInArrow kernels (r12 A/B artifact — measured a TIE vs
-    pandas_udf at sf10: the vec-family cost is per-query fixed Python
-    dispatch, not the IPC mechanism; PERFORMANCE.md r12) must stay
-    bit-identical to the pandas kernels: same sequential-fold
-    summation order, same null semantics, zero-copy fast path and
-    null-bearing slow path both covered."""
+def _hof_scores(df, q):
+    """vec_id -> raw HOF ``cosine_sim`` score: the fold every other
+    cosine kernel must reproduce bit for bit."""
     from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.functions.vector import (
-        cosine_scores_arrow,
-        cosine_scores_map_arrow,
+        cosine_sim,
+        lit_double_array,
+    )
+
+    return {
+        r["vec_id"]: r["score"]
+        for r in df.select(
+            "vec_id", cosine_sim(F.col("embedding"), lit_double_array(q)).alias("score")
+        ).collect()
+    }
+
+
+def test_lsh_bucket_arrow_matches_hof_buckets(spark, sf_dir):
+    """The Arrow LSH kernel (hyperplane_buckets' scale kernel) must give
+    the HOF expression's buckets: same fixture histogram as
+    ``hyperplane_buckets(kernel='hof')``, and a NULL vector gets a NULL
+    bucket (full-width rows beside it still bucket normally)."""
+    from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.functions.vector import (
         lsh_bucket_arrow,
-        lsh_bucket_counts_map_arrow,
     )
 
     e = load_table(spark, sf_dir, "embeddings")
-    q = _query_vec(spark, sf_dir)
-    a = e.select(
-        "vec_id", cosine_scores_arrow(F.col("embedding"), q).alias("score")
-    ).orderBy("vec_id").collect()
-    b = cosine_scores_map_arrow(e, ["vec_id"], "embedding", q).orderBy("vec_id").collect()
-    assert [tuple(r) for r in a] == [tuple(r) for r in b]  # bit-equal, not approx
-
     planes = [vec_ops._hyperplane(64, p) for p in range(4)]
     ha = (
         e.select(lsh_bucket_arrow(F.col("embedding"), planes).alias("bucket"))
         .groupBy("bucket").count().orderBy("bucket").collect()
     )
     hb = (
-        lsh_bucket_counts_map_arrow(e, "embedding", planes)
+        vec_ops.hyperplane_buckets(e, "embedding", 64, n_planes=4, kernel="hof")
         .groupBy("bucket").count().orderBy("bucket").collect()
     )
     assert ha == hb
 
-    # null-bearing frame exercises the slow path: NULL vector -> NULL out
     nulled = spark.createDataFrame(
         [(1, [0.5] * 8), (2, None), (3, [-0.25] * 8)],
         "vec_id long, embedding array<float>",
     )
     qv = [1.0] * 8
-    pa_rows = nulled.select(
-        "vec_id", cosine_scores_arrow(F.col("embedding"), qv).alias("score")
-    ).orderBy("vec_id").collect()
-    ma_rows = (
-        cosine_scores_map_arrow(nulled, ["vec_id"], "embedding", qv)
-        .orderBy("vec_id").collect()
-    )
-    assert [tuple(r) for r in pa_rows] == [tuple(r) for r in ma_rows]
-    assert pa_rows[1]["score"] is None
-    pb = nulled.select(
-        "vec_id", lsh_bucket_arrow(F.col("embedding"), [qv, [-1.0] * 8]).alias("bucket")
-    ).orderBy("vec_id").collect()
-    mb = (
-        lsh_bucket_counts_map_arrow(nulled, "embedding", [qv, [-1.0] * 8])
-        .orderBy("bucket").collect()
-    )
-    assert sorted(r["bucket"] for r in pb if r["bucket"] is not None) == sorted(
-        r["bucket"] for r in mb if r["bucket"] is not None
-    )
-    assert sum(1 for r in mb if r["bucket"] is None) == 1
+    pb = {
+        r["vec_id"]: r["bucket"]
+        for r in nulled.select(
+            "vec_id", lsh_bucket_arrow(F.col("embedding"), [qv, [-1.0] * 8]).alias("bucket")
+        ).collect()
+    }
+    assert pb == {1: 1, 2: None, 3: 2}
 
 
 def test_explode_kernel_bit_matches_and_stays_jvm_side(spark, sf_dir):
     """The r12 JVM explode cosine kernel (PERFORMANCE.md Round-12 explode kernel:
-    steady-state tie with the Arrow kernel at sf10, ~half the
-    contention degradation, no Python worker) must be
-    bit-identical to the Arrow kernel — same sequential fold: a
-    vector's exploded elements stay contiguous in one partition and
-    the partial hash aggregate folds them in pos order — and its plan
-    must contain NO Python eval node at all (that absence IS the win:
-    the Arrow kernels pay a per-query Python dispatch floor that no
-    IPC mechanism removes, r12 mapInArrow A/B)."""
+    steady-state tie with the deleted Arrow kernel at sf10, ~half the
+    contention degradation, no Python worker) must be bit-identical
+    to the HOF ``cosine_sim`` — same sequential fold: a vector's
+    exploded elements stay contiguous in one partition and the
+    partial hash aggregate folds them in pos order — and its plan
+    must contain NO Python eval node at all."""
     from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.functions.vector import (
-        cosine_scores_arrow,
         cosine_scores_explode,
     )
 
     e = load_table(spark, sf_dir, "embeddings")
     q = _query_vec(spark, sf_dir)
-    a = e.select(
-        "vec_id", cosine_scores_arrow(F.col("embedding"), q).alias("score")
-    ).orderBy("vec_id").collect()
-    x = cosine_scores_explode(e, ["vec_id"], "embedding", q).orderBy("vec_id").collect()
-    assert [tuple(r) for r in a] == [tuple(r) for r in x]  # bit-equal, not approx
+    x = {
+        r["vec_id"]: r["score"]
+        for r in cosine_scores_explode(e, ["vec_id"], "embedding", q).collect()
+    }
+    assert x == _hof_scores(e, q)  # bit-equal, not approx
 
-    # the full operator contract: all three kernels, same top-k
+    # the full operator contract: both kernels, same top-k
     topk = {
         k: vec_ops.cosine_topk(e, "vec_id", "embedding", q, k=10, kernel=k).collect()
-        for k in ("hof", "arrow", "explode")
+        for k in ("hof", "explode")
     }
-    assert [tuple(r) for r in topk["explode"]] == [tuple(r) for r in topk["arrow"]]
     assert [tuple(r) for r in topk["explode"]] == [tuple(r) for r in topk["hof"]]
 
     # plan: zero Python eval nodes, and the pieces that make it fast
@@ -404,28 +373,6 @@ def test_explode_kernel_bit_matches_and_stays_jvm_side(spark, sf_dir):
         assert python_node not in plan, python_node
     assert "Generate" in plan and "HashAggregate" in plan
 
-    # null vector -> NULL score; empty vector -> 0.0 (zero norm) —
-    # matching the Arrow scale kernel's documented semantics
-    edge = spark.createDataFrame(
-        [(1, [0.5] * 8), (2, None), (3, [])],
-        "vec_id long, embedding array<float>",
-    )
-    qv = [1.0] * 8
-    rows = {
-        r["vec_id"]: r["score"]
-        for r in cosine_scores_explode(edge, ["vec_id"], "embedding", qv).collect()
-    }
-    arrow_rows = {
-        r["vec_id"]: r["score"]
-        for r in edge.select(
-            "vec_id", cosine_scores_arrow(F.col("embedding"), qv).alias("score")
-        ).collect()
-    }
-    assert set(rows) == {1, 2, 3}
-    assert rows[2] is None and arrow_rows[2] is None
-    assert rows[3] == 0.0 == arrow_rows[3]
-    assert rows[1] == arrow_rows[1]
-
     # 'auto' resolves to the explode kernel above the size gate
     assert vec_ops._resolve_kernel(e, "auto", scale_kernel="explode") in (
         "explode", "hof"
@@ -436,8 +383,9 @@ def test_explode_kernel_topk_safe_under_duplicate_ids(spark):
     """cosine_topk's explode path must score PER ROW even when the id
     column is duplicated (cosine_scores_explode aggregates by its id
     columns — without the operator's per-row uniquifier, two rows
-    sharing an id would merge into one garbage score). All three
-    kernels must agree on the duplicate-id frame."""
+    sharing an id would merge into one garbage score). Both kernels
+    must agree on the duplicate-id frame, and a kernel cosine_topk
+    does not have is an error, not a silent fallback."""
     dup = spark.createDataFrame(
         [(1, [1.0, 0.0, 0.0, 0.0]),
          (1, [0.0, 1.0, 0.0, 0.0]),   # same id, different vector
@@ -451,27 +399,26 @@ def test_explode_kernel_topk_safe_under_duplicate_ids(spark):
             tuple(r) for r in
             vec_ops.cosine_topk(dup, "vec_id", "embedding", q, k=4, kernel=k).collect()
         )
-        for k in ("hof", "arrow", "explode")
+        for k in ("hof", "explode")
     }
-    assert out["explode"] == out["arrow"] == out["hof"]
+    assert out["explode"] == out["hof"]
     # both rows of id 1 are present with their own scores (1.0 and 0.0)
     id1_scores = sorted(s for i, s in out["explode"] if i == 1)
     assert id1_scores == [0.0, 1.0]
+    with pytest.raises(ValueError, match="auto\\|hof\\|explode"):
+        vec_ops.cosine_topk(dup, "vec_id", "embedding", q, k=4, kernel="arrow")
 
 
 def test_cosine_kernels_agree_on_null_vectors(spark):
-    """All THREE kernels must give NULL for a NULL vector (r12 ADVICE:
-    the HOF form used to fall through its when() to 0.0 because a NULL
-    condition is not-true, so kernel='auto' flipped NULL-vector scores
-    across the size gate). Pinned here so the three-way agreement
-    covers the null edge, not just populated rows. DuckDB's
-    list_cosine_similarity is NULL-propagating too, so this is also
-    the oracle-side semantic."""
+    """Both kernels must give NULL for a NULL vector and 0.0 for an
+    empty one (r12 ADVICE: the HOF form used to fall through its
+    when() to 0.0 because a NULL condition is not-true, so
+    kernel='auto' flipped NULL-vector scores across the size gate).
+    Raw scores are compared bit-equal. DuckDB's list_cosine_similarity
+    is NULL-propagating too, so this is also the oracle-side
+    semantic."""
     from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.functions.vector import (
-        cosine_scores_arrow,
         cosine_scores_explode,
-        cosine_sim,
-        lit_double_array,
     )
 
     edge = spark.createDataFrame(
@@ -479,26 +426,13 @@ def test_cosine_kernels_agree_on_null_vectors(spark):
         "vec_id long, embedding array<float>",
     )
     qv = [1.0] * 8
-    hof = {
-        r["vec_id"]: r["score"]
-        for r in edge.select(
-            "vec_id",
-            cosine_sim(F.col("embedding"), lit_double_array(qv)).alias("score"),
-        ).collect()
-    }
-    arrow = {
-        r["vec_id"]: r["score"]
-        for r in edge.select(
-            "vec_id", cosine_scores_arrow(F.col("embedding"), qv).alias("score")
-        ).collect()
-    }
+    hof = _hof_scores(edge, qv)
     explode = {
         r["vec_id"]: r["score"]
         for r in cosine_scores_explode(edge, ["vec_id"], "embedding", qv).collect()
     }
-    assert hof[2] is None and arrow[2] is None and explode[2] is None
-    assert hof[3] == arrow[3] == explode[3] == 0.0
-    assert hof[1] == arrow[1] == explode[1]
+    assert hof == explode
+    assert hof[2] is None and hof[3] == 0.0
 
 
 def test_explode_kernel_truncates_ragged_rows(spark):
