@@ -49,10 +49,15 @@ def rescan_with_tolerance(df: DataFrame, change_col: str, watermark, tolerance_m
 
 def next_watermark(df: DataFrame, change_col: str) -> DataFrame:
     """New high-watermark = max(change_col) of the processed batch
-    (≙ service.py:73), plus the batch size for commit bookkeeping."""
+    (≙ service.py:73), plus the batch size for commit bookkeeping.
+    ``last_updated_text`` is the same max as Spark's own string cast
+    (session time zone): the form a commit persists, because a scan
+    literal parses it back exactly, while a collected datetime is
+    rendered in the Python host's local time zone."""
     return df.agg(
         F.max(change_col).alias("last_updated"),
         F.count(F.lit(1)).alias("batch_rows"),
+        F.max(change_col).cast("string").alias("last_updated_text"),
     )
 
 

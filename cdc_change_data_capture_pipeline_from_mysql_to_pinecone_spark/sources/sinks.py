@@ -6,9 +6,12 @@ index (service_layer/service.py:151-166) and its watermark table via
 transactional table format in this environment, MERGE is expressed as
 read + union + last-writer-wins max_by aggregate + atomic directory
 swap —
-correct for the engine's keyed tables (watermark, vectors), and the
+correct for the engine's keyed vector tables, and the
 ``foreachBatch`` body a Structured Streaming sink uses for
 exactly-once effect given deterministic ids (SURVEY §4 "exactly-once").
+The CDC watermarks are not a table: one small JSON file per store
+(:func:`read_watermarks` / :func:`commit_watermark`), the shape
+Structured Streaming gives its offset and commit logs.
 
 At 100 TB the same call sites would target Delta/Iceberg MERGE — the
 operator contract (keyed last-writer-wins) is format-independent.
@@ -29,6 +32,7 @@ import json
 import os
 import shutil
 import uuid
+from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -44,7 +48,8 @@ def upsert_parquet(
     version_col: str,
 ) -> None:
     """MERGE ``updates`` into the keyed parquet table at ``path``:
-    highest ``version_col`` per key wins; replay-idempotent."""
+    highest ``version_col`` per key wins; replay-idempotent. O(table)
+    per call — for small keyed tables only."""
     if os.path.exists(path):
         current = spark.read.parquet(path)
         merged = current.unionByName(updates)
@@ -99,6 +104,37 @@ def recover_table(path: str) -> str:
                 shutil.rmtree(os.path.join(path, d), ignore_errors=True)
                 status = max(status, "cleaned", key=rank.get)
     return status
+
+
+#: The CDC watermark file, beside a store's ``vectors`` table (not
+#: inside it: a bucket regrow swaps that whole directory).
+WATERMARKS = "watermarks.json"
+
+
+def read_watermarks(store_dir: str) -> dict[str, dict]:
+    """``{table: {"last_updated": text, "batch_rows": n}}`` from the
+    store's watermark file ({} before the first commit). ``text`` is
+    Spark's own string cast of ``max(change_col)`` in the session time
+    zone, so it round-trips exactly as a scan literal. Lock-free: the
+    file is only ever replaced by an atomic rename."""
+    path = os.path.join(store_dir, WATERMARKS)
+    if not os.path.exists(path):
+        return {}
+    with open(path) as fh:
+        return json.load(fh)
+
+
+def commit_watermark(store_dir: str, table: str, last_updated: str, batch_rows: int) -> None:
+    """Record ``table``'s watermark unless a later one is stored — the
+    max-wins rule out-of-order streaming micro-batches depend on
+    (values compare as ISO dates/timestamps). Read-modify-write of the
+    whole file: the caller holds the store's writer lock."""
+    wms = read_watermarks(store_dir)
+    held = wms.get(table)
+    if held and datetime.fromisoformat(held["last_updated"]) > datetime.fromisoformat(last_updated):
+        return
+    wms[table] = {"last_updated": last_updated, "batch_rows": batch_rows}
+    atomic_write_file(os.path.join(store_dir, WATERMARKS), json.dumps(wms, sort_keys=True))
 
 
 #: Auto-sizing target: keys per bucket before the table doubles its
@@ -273,8 +309,8 @@ def upsert_parquet_partitioned(
     reads. Costs one per-task sort of batch-sized data on the write
     path; no effect on results.
 
-    The plain ``upsert_parquet`` is O(table) per merge — fine for the
-    one-row watermark table, wrong for a growing vectors table (the
+    The plain ``upsert_parquet`` is O(table) per merge — fine for a
+    small keyed table, wrong for a growing vectors table (the
     reference's Pinecone index, service_layer/service.py:151-166, is
     upsert-by-id: cost proportional to the batch, not the index). Here
     the table lives as ``path/kbucket=N/``; each key hashes to one
@@ -436,6 +472,17 @@ def _maybe_grow_buckets(
     # regrow moves rows, never changes count or schema — carry both to
     # the replacement dir's marker explicitly (the tmp has no prior)
     _write_marker(tmp, n2, total, schema_json)
+    # the swap replaces the whole directory: hard-link the table's side
+    # state (version sequence, IVF files, schema, namespace tables)
+    # into the replacement first — no data copied, live table untouched
+    for name in os.listdir(path):
+        if not name.startswith("_") or name.startswith(("_nbuckets", "_SUCCESS", "_tmp-", "_old-")):
+            continue
+        src, dst = os.path.join(path, name), os.path.join(tmp, name)
+        if os.path.isdir(src):
+            shutil.copytree(src, dst, copy_function=os.link)
+        else:
+            os.link(src, dst)
     _swap_in(path, tmp)
     return n2
 

@@ -90,7 +90,13 @@ class VectorStore:
     root table's Spark file listing, so the DEFAULT namespace — the
     root — reads unchanged). Versions, locks, schema, and bucket
     layout are all per-namespace; cross-namespace ids never collide,
-    matching the hosted-store contract."""
+    matching the hosted-store contract.
+
+    A bucket regrow of the root swaps the whole root directory, with
+    the namespace directories hard-linked into the replacement. It
+    holds only the root's writer lock, not a namespace writer's: a
+    namespace commit that lands while the root regrows is lost, so
+    regrow-sized root upserts must not overlap namespace writers."""
 
     def __init__(self, spark: SparkSession, path: str, dim: int):
         self.spark = spark

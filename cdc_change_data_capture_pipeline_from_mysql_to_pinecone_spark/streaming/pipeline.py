@@ -13,11 +13,12 @@ Here the same dataflow is:
   effect on the sink given last-writer-wins upsert);
 - ``commit_tick`` — the ONE commit path: the tick's ``id``/``values``/
   ``metadata`` rows go through ``sources.vector_store.VectorStore.
-  upsert`` (keyed, last-call-wins), then the watermark row is
-  committed. Idempotent sink + deterministic ids + a replayable source
-  is the Structured Streaming exactly-once recipe;
+  upsert`` (keyed, last-call-wins), then the table's watermark is
+  written to the store's ``watermarks.json`` under the same store
+  lock. Idempotent sink + deterministic ids + a replayable source is
+  the Structured Streaming exactly-once recipe;
 - ``sweep`` — the poll loop as batch ticks over every tracked table
-  (the hand-rolled watermark table, service.py:21-46);
+  (≙ the reference's hand-rolled watermark table, service.py:21-46);
 - ``run_multi_table_streaming`` — the poll loop as Structured
   Streaming: one file-source query per table, ``foreachBatch`` into
   ``commit_tick``, processing-time trigger (≙ ``time.sleep(300)``,
@@ -34,7 +35,6 @@ Here the same dataflow is:
 
 from __future__ import annotations
 
-import datetime as _dt
 import logging
 import os
 from concurrent.futures import ThreadPoolExecutor
@@ -47,7 +47,7 @@ from pyspark.sql import types as T
 
 from ..operators import cdc
 from ..sources._commit import table_lock
-from ..sources.sinks import recover_table, upsert_parquet
+from ..sources.sinks import commit_watermark, read_watermarks, recover_table
 from ..sources.tables import _nanos_ts_columns, load_table
 from ..sources.vector_store import VectorStore
 
@@ -113,7 +113,8 @@ def cdc_tick(
 
     DAG: incremental scan (S4) -> canonical JSON (P6) -> chunk (W1/A2)
     -> [embed (U1)] -> sink rows keyed by deterministic chunk id.
-    The watermark DF carries max(change_col) for the commit (S6).
+    The watermark DF carries max(change_col), as a value and as Spark's
+    string cast (``last_updated_text``), for the commit (S6).
     """
     delta = cdc.incremental_scan(df, change_col, watermark)
     serialized = cdc.serialize_rows(delta)
@@ -146,7 +147,6 @@ def cdc_tick(
 def commit_tick(
     spark: SparkSession,
     store: VectorStore,
-    wm_path: str,
     table: str,
     sink_rows: DataFrame,
     wm_row: Row,
@@ -156,12 +156,14 @@ def commit_tick(
 
     ``sink_rows`` (``id``, ``values``, ``metadata``, as ``cdc_tick``
     emits them) go through ``store.upsert`` (keyed MERGE, last call
-    wins, serialized by the store's writer lock); then ``wm_row``
-    (``last_updated``, ``batch_rows``) is committed to the keyed
-    watermark table at ``wm_path`` under its own writer lock. Both
-    locks are ``flock``s, so concurrent tables (threads or streaming
-    queries) need no in-process lock. An idle tick (0 rows) touches
-    nothing.
+    wins, serialized by the store's writer lock); then ``wm_row``'s
+    ``last_updated_text`` and ``batch_rows`` land in
+    ``watermarks.json`` beside the store (``sinks.commit_watermark``:
+    one atomic file replace, a later stored watermark wins) under the
+    same lock, taken again rather than nested — ``flock`` is per open
+    file, so nesting would deadlock. One lock, an ``flock``, so
+    concurrent tables (threads or streaming queries) need no
+    in-process lock. An idle tick (0 rows) touches nothing.
 
     Vectors first, watermark second: a crash between the two replays
     the delta next tick, and deterministic chunk ids make the replay
@@ -171,16 +173,8 @@ def commit_tick(
     if n == 0:
         return 0
     store.upsert(sink_rows)
-    lu = wm_row["last_updated"]
-    if isinstance(lu, _dt.date) and not isinstance(lu, _dt.datetime):
-        # date-typed change columns (o_orderdate) widen to midnight
-        # timestamps in the shared watermark table
-        lu = _dt.datetime(lu.year, lu.month, lu.day)
-    update = spark.createDataFrame(
-        [(table, lu, n)], "table_name string, last_updated timestamp, batch_rows long"
-    ).withColumn("version", F.unix_micros("last_updated"))
-    with table_lock(wm_path):
-        upsert_parquet(spark, wm_path, update, ["table_name"], "version")
+    with table_lock(store.path):
+        commit_watermark(os.path.dirname(store.path), table, wm_row["last_updated_text"], n)
     return n
 
 
@@ -202,16 +196,17 @@ def sweep(
     ``tables`` maps table name -> (change_col, order_col). State lives
     under ``store_dir``: a ``VectorStore`` at ``vectors`` (chunk id ->
     384-dim ``values`` + ``metadata`` {source, id, text}, queryable
-    with ``VectorStore.query``) and a keyed ``watermark`` table.
-    Deterministic chunk ids make the whole sweep replay-idempotent —
-    a crash after the vector upsert but before the watermark commit
-    reprocesses the delta into identical rows.
+    with ``VectorStore.query``) and ``watermarks.json``
+    (``sinks.read_watermarks``). Deterministic chunk ids make the
+    whole sweep replay-idempotent — a crash after the vector upsert
+    but before the watermark commit reprocesses the delta into
+    identical rows.
 
     ``max_parallel_tables`` > 1 processes tables concurrently (the
     reference loops serially, controller.py:25-27): each table's
     read+serialize+chunk+embed DAG runs as parallel Spark jobs from a
-    thread pool; the commits serialize on the store's and the
-    watermark table's writer locks.
+    thread pool; the commits serialize on the store's one writer
+    lock.
 
     ``on_error='continue'`` reproduces the reference's per-tick fault
     isolation (errors logged, tick abandoned for that table only,
@@ -220,19 +215,8 @@ def sweep(
     retries exactly the same delta), and every other table completes.
     Default 'raise' fails fast — right for tests and batch jobs.
     """
-    wm_path = os.path.join(store_dir, "watermark")
     store = VectorStore(spark, os.path.join(store_dir, "vectors"), EMBED_DIM)
-    # sink-open recovery: promote a crash-stranded aside dir back to
-    # its committed state before reading watermarks (idempotent)
-    recover_table(wm_path)
-    # Collect watermarks eagerly: the commits below replace the
-    # watermark directory, so a lazily-read wm_df would capture a file
-    # listing that points at deleted part files (FAILED_READ_FILE on
-    # the second delta-bearing table).
-    wm = {}
-    if os.path.exists(wm_path):
-        rows = spark.read.parquet(wm_path).select("table_name", "last_updated").collect()
-        wm = {r["table_name"]: r["last_updated"] for r in rows}
+    wm = read_watermarks(store_dir)
 
     def tick(table: str) -> int:
         change_col, order_col = tables[table]
@@ -241,10 +225,10 @@ def sweep(
             source=table,
             change_col=change_col,
             order_col=order_col,
-            watermark=wm.get(table, "1970-01-01"),
+            watermark=wm.get(table, {}).get("last_updated", "1970-01-01"),
             with_embeddings=True,
         )
-        return commit_tick(spark, store, wm_path, table, sink_rows, new_wm.collect()[0])
+        return commit_tick(spark, store, table, sink_rows, new_wm.collect()[0])
 
     def guarded(table: str) -> int:
         try:
@@ -297,9 +281,7 @@ def run_multi_table_streaming(
     ``block=False`` returns the started queries immediately — callers
     (tests, service managers) poll the store and stop them.
     """
-    wm_path = os.path.join(store_dir, "watermark")
     store = VectorStore(spark, os.path.join(store_dir, "vectors"), EMBED_DIM)
-    recover_table(wm_path)
     # keep tz-naive parquet timestamps as TimestampType (see sources.tables)
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
 
@@ -319,7 +301,7 @@ def run_multi_table_streaming(
                 watermark="1970-01-01",
                 with_embeddings=True,
             )
-            commit_tick(spark, store, wm_path, table, sink_rows, new_wm.collect()[0])
+            commit_tick(spark, store, table, sink_rows, new_wm.collect()[0])
 
         return process
 
@@ -432,14 +414,15 @@ def _run_sweep(spark, source_df, state_path, change_col, delta_fn, merge_fn) -> 
         new_state = merge_fn(spark.read.parquet(state_path), update)
     else:
         new_state = update
-    _commit_rollup(state_path, new_state, wm_row["last_updated"])
+    _commit_rollup(state_path, new_state, wm_row["last_updated_text"])
     return wm_row["batch_rows"]
 
 
-def _commit_rollup(rollup_path: str, new_state, watermark) -> None:
+def _commit_rollup(rollup_path: str, new_state, watermark: str) -> None:
     """Write state + ``_watermark`` marker to a tmp dir and swap both
     in with ONE atomic rename (the exactly-once pivot both rollup
-    sweeps share)."""
+    sweeps share). ``watermark`` is Spark's string cast of the max, so
+    it reads back exactly under any host time zone."""
     import uuid as _uuid
 
     from ..sources.sinks import _swap_in
@@ -447,7 +430,7 @@ def _commit_rollup(rollup_path: str, new_state, watermark) -> None:
     tmp = f"{rollup_path}.tmp-{_uuid.uuid4().hex[:8]}"
     new_state.write.mode("overwrite").parquet(tmp)
     with open(os.path.join(tmp, "_watermark"), "w") as fh:
-        fh.write(str(watermark))
+        fh.write(watermark)
     _swap_in(rollup_path, tmp)
 
 

@@ -176,38 +176,42 @@ def test_sized_session_large_regime_policies(spark, tmp_path):
     (no data): every regime conf must be what that call alone sets."""
     import bench
 
-    big = tmp_path / "sparse.parquet"
-    with open(big, "wb") as fh:
-        fh.truncate(2 * 1024 * 1024 * 1024)
-    s = bench.sized_session(str(tmp_path), app_name="policy_probe")
-    assert s.conf.get("spark.sql.adaptive.enabled") == "true"
-    assert s.conf.get("spark.sql.autoBroadcastJoinThreshold") == str(4 << 20)
-    assert s.conf.get("spark.sql.adaptive.autoBroadcastJoinThreshold") == str(32 << 20)
-    assert s.conf.get("spark.sql.join.preferSortMergeJoin") == "false"
-    # width = bytes/8MiB clamped to [16,256]; 2 GiB hits the clamp
-    assert s.conf.get("spark.sql.shuffle.partitions") == "256"
+    # sized_session and size_regime mutate the shared session: snapshot
+    # every runtime conf before anything changes, and put each one back
+    # (or unset it) afterwards so later tests keep the fixture's session
+    saved = {k: v for k, v in spark.conf.getAll.items() if spark.conf.isModifiable(k)}
+    try:
+        big = tmp_path / "sparse.parquet"
+        with open(big, "wb") as fh:
+            fh.truncate(2 * 1024 * 1024 * 1024)
+        s = bench.sized_session(str(tmp_path), app_name="policy_probe")
+        assert s.conf.get("spark.sql.adaptive.enabled") == "true"
+        assert s.conf.get("spark.sql.autoBroadcastJoinThreshold") == str(4 << 20)
+        assert s.conf.get("spark.sql.adaptive.autoBroadcastJoinThreshold") == str(32 << 20)
+        assert s.conf.get("spark.sql.join.preferSortMergeJoin") == "false"
+        # width = bytes/8MiB clamped to [16,256]; 2 GiB hits the clamp
+        assert s.conf.get("spark.sql.shuffle.partitions") == "256"
 
-    # one policy for every regime: sizing for the sf0.1 input after
-    # the >=1 GiB one leaves every regime conf exactly as sizing for
-    # sf0.1 alone does — nothing of the large regime lingers
-    sf01_bytes = 17_508_506  # on-disk size of the sf0.1 fixture
-    big_confs = bench.size_regime(s, 2 * 1024 * 1024 * 1024)
-    after_big = bench.size_regime(s, sf01_bytes)
-    assert set(after_big) == set(big_confs)
-    got = {k: s.conf.get(k) for k in after_big}
-    for k in after_big:
-        s.conf.unset(k)
-    bench.size_regime(s, sf01_bytes)
-    assert got == {k: s.conf.get(k) for k in after_big}
-    assert got["spark.sql.adaptive.enabled"] == "false"
-    assert got["spark.sql.join.preferSortMergeJoin"] == "true"  # Spark default
-
-    # restore the shared session's small-regime-ish defaults for
-    # whatever test runs next (sized_session mutates the singleton)
-    for k in list(after_big) + ["spark.sql.execution.arrow.maxRecordsPerBatch"]:
-        s.conf.unset(k)
-    s.conf.set("spark.sql.adaptive.enabled", "true")
-    s.conf.set("spark.sql.shuffle.partitions", "32")
+        # one policy for every regime: sizing for the sf0.1 input after
+        # the >=1 GiB one leaves every regime conf exactly as sizing for
+        # sf0.1 alone does — nothing of the large regime lingers
+        sf01_bytes = 17_508_506  # on-disk size of the sf0.1 fixture
+        big_confs = bench.size_regime(s, 2 * 1024 * 1024 * 1024)
+        after_big = bench.size_regime(s, sf01_bytes)
+        assert set(after_big) == set(big_confs)
+        got = {k: s.conf.get(k) for k in after_big}
+        for k in after_big:
+            s.conf.unset(k)
+        bench.size_regime(s, sf01_bytes)
+        assert got == {k: s.conf.get(k) for k in after_big}
+        assert got["spark.sql.adaptive.enabled"] == "false"
+        assert got["spark.sql.join.preferSortMergeJoin"] == "true"  # Spark default
+    finally:
+        for k in spark.conf.getAll:
+            if spark.conf.isModifiable(k) and k not in saved:
+                spark.conf.unset(k)
+        for k, v in saved.items():
+            spark.conf.set(k, v)
 
 
 def test_conf_pinned_session_drops_confs_unset_on_parent(spark):

@@ -6,6 +6,7 @@ from __future__ import annotations
 import os
 import sys
 
+import pytest
 from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -128,58 +129,73 @@ def test_delta_distinct_rollup_merge_is_order_free_and_tight(spark, sf_dir):
         assert abs(nd - exact[et]) <= max(3, 0.05 * exact[et]), (et, nd, exact[et])
 
 
-def test_sweep_rollup_maintains_stored_state_exactly_once(spark, tmp_path):
+@pytest.mark.parametrize("tz", ["UTC", "America/New_York"])
+def test_sweep_rollup_maintains_stored_state_exactly_once(spark, tmp_path, tz):
     """Maintained rollup end-to-end across ticks: tick 1 folds the
     initial rows, tick 2 folds ONLY the delta, an idle tick changes
     nothing, and the final stored state equals a single-shot rollup
     over all data. A simulated crash between state-swap and nothing
     (there is no second commit — watermark rides the same atomic
     rename) cannot double-merge: re-running the tick after a
-    completed swap is the idle case."""
-    import datetime
-    import os
+    completed swap is the idle case. The Python host's time zone
+    does not matter: the ``_watermark`` marker holds Spark's own text
+    of the max (session time zone), so under a non-UTC host tick 2
+    still folds exactly the 30 new rows (the JVM stays in UTC)."""
+    import time
 
-    import pandas as pd
+    saved_tz = os.environ.get("TZ")
+    os.environ["TZ"] = tz
+    time.tzset()
+    try:
+        import datetime
 
-    from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.operators.incremental import (
-        delta_rollup,
-    )
-    from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.streaming.pipeline import (
-        sweep_rollup,
-    )
+        import pandas as pd
 
-    def write_events(src, rows):
-        os.makedirs(src, exist_ok=True)
-        pdf = pd.DataFrame(rows, columns=["event_id", "ts", "event_type", "value"])
-        pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-        pdf.to_parquet(os.path.join(src, "events.parquet"), index=False)
+        from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.operators.incremental import (
+            delta_rollup,
+        )
+        from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.streaming.pipeline import (
+            sweep_rollup,
+        )
 
-    d1, d2 = datetime.datetime(2024, 1, 1), datetime.datetime(2024, 2, 1)
-    rows1 = [(i, d1, "click" if i % 2 else "view", float(i)) for i in range(50)]
-    rows2 = rows1 + [(100 + i, d2, "click", 2.0) for i in range(30)]
-    src1, src2 = str(tmp_path / "s1"), str(tmp_path / "s2")
-    write_events(src1, rows1)
-    write_events(src2, rows2)
+        def write_events(src, rows):
+            os.makedirs(src, exist_ok=True)
+            pdf = pd.DataFrame(rows, columns=["event_id", "ts", "event_type", "value"])
+            pdf["ts"] = pdf["ts"].astype("datetime64[us]")
+            pdf.to_parquet(os.path.join(src, "events.parquet"), index=False)
 
-    store = str(tmp_path / "store")
-    measures = {"value": "sum", "event_id": "max"}
-    assert sweep_rollup(spark, src1, store, "events", "ts", ["event_type"], measures) == 50
-    assert sweep_rollup(spark, src2, store, "events", "ts", ["event_type"], measures) == 30
-    # idle: same source again -> no rows, state untouched
-    assert sweep_rollup(spark, src2, store, "events", "ts", ["event_type"], measures) == 0
+        d1, d2 = datetime.datetime(2024, 1, 1), datetime.datetime(2024, 2, 1)
+        rows1 = [(i, d1, "click" if i % 2 else "view", float(i)) for i in range(50)]
+        rows2 = rows1 + [(100 + i, d2, "click", 2.0) for i in range(30)]
+        src1, src2 = str(tmp_path / "s1"), str(tmp_path / "s2")
+        write_events(src1, rows1)
+        write_events(src2, rows2)
 
-    got = {
-        r["event_type"]: (r["rollup_rows"], r["sum_value"], r["max_event_id"])
-        for r in spark.read.parquet(os.path.join(store, "rollup_events")).collect()
-    }
-    full = spark.createDataFrame(
-        [(i, t, v) for i, _ts, t, v in rows2], "event_id long, event_type string, value double"
-    )
-    want = {
-        r["event_type"]: (r["rollup_rows"], r["sum_value"], r["max_event_id"])
-        for r in delta_rollup(full, ["event_type"], measures).collect()
-    }
-    assert got == want
+        store = str(tmp_path / "store")
+        measures = {"value": "sum", "event_id": "max"}
+        assert sweep_rollup(spark, src1, store, "events", "ts", ["event_type"], measures) == 50
+        assert sweep_rollup(spark, src2, store, "events", "ts", ["event_type"], measures) == 30
+        # idle: same source again -> no rows, state untouched
+        assert sweep_rollup(spark, src2, store, "events", "ts", ["event_type"], measures) == 0
+
+        got = {
+            r["event_type"]: (r["rollup_rows"], r["sum_value"], r["max_event_id"])
+            for r in spark.read.parquet(os.path.join(store, "rollup_events")).collect()
+        }
+        full = spark.createDataFrame(
+            [(i, t, v) for i, _ts, t, v in rows2], "event_id long, event_type string, value double"
+        )
+        want = {
+            r["event_type"]: (r["rollup_rows"], r["sum_value"], r["max_event_id"])
+            for r in delta_rollup(full, ["event_type"], measures).collect()
+        }
+        assert got == want
+    finally:
+        if saved_tz is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = saved_tz
+        time.tzset()
 
 
 def test_changelog_rollup_matches_recompute(spark):

@@ -13,6 +13,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.sources import load_table  # noqa: E402
 from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.streaming.pipeline import (  # noqa: E402
     cdc_tick,
+    read_watermarks,
     run_multi_table_streaming,
 )
 
@@ -98,8 +99,8 @@ def test_streaming_processing_time_trigger(spark, sf_dir, tmp_path):
         for q in queries:
             q.stop()
     assert len(commits) >= 2, commits  # one micro-batch per trigger tick per file
-    wm = spark.read.parquet(os.path.join(store, "watermark")).collect()
-    assert [r["batch_rows"] for r in wm] == [1000]  # offsets advanced file-by-file
+    wm = read_watermarks(store)
+    assert [e["batch_rows"] for e in wm.values()] == [1000]  # offsets advanced file-by-file
     assert spark.read.parquet(os.path.join(store, "vectors")).count() == 10
 
 
@@ -122,26 +123,18 @@ def test_multi_table_streaming_independent_watermarks(spark, sf_dir, tmp_path):
         block=False,
     )
     try:
-        wm_path = os.path.join(store, "watermark")
         deadline = time.monotonic() + 90
         wm = {}
         while time.monotonic() < deadline and len(wm) < 2:
-            if os.path.exists(wm_path):
-                try:
-                    wm = {
-                        r["table_name"]: r["last_updated"]
-                        for r in spark.read.parquet(wm_path).collect()
-                    }
-                except Exception:
-                    pass  # mid-swap read; retry
+            wm = {t: e["last_updated"] for t, e in read_watermarks(store).items()}
             time.sleep(0.5)
     finally:
         for q in queries:
             q.stop()
     assert set(wm) == {"events", "orders"}, wm
     # independent per-table values: each equals its own source max
-    ev_max = load_table(spark, sf_dir, "events").agg(F.max("ts")).collect()[0][0]
-    o_max = load_table(spark, sf_dir, "orders").agg(F.max("o_orderdate")).collect()[0][0]
+    ev_max = load_table(spark, sf_dir, "events").agg(F.max("ts").cast("string")).first()[0]
+    o_max = load_table(spark, sf_dir, "orders").agg(F.max("o_orderdate").cast("string")).first()[0]
     assert wm["events"] == ev_max
     assert wm["orders"] == o_max and wm["events"] != wm["orders"]
     vecs = spark.read.parquet(os.path.join(store, "vectors"))
@@ -162,12 +155,9 @@ def test_multi_table_streaming_available_now(spark, sf_dir, tmp_path):
         {"events": ("ts", "event_id"), "orders": ("o_orderdate", "o_orderkey")},
         available_now=True,
     )
-    wm = {
-        r["table_name"]: r["last_updated"]
-        for r in spark.read.parquet(os.path.join(store, "watermark")).collect()
-    }
+    wm = {t: e["last_updated"] for t, e in read_watermarks(store).items()}
     assert set(wm) == {"events", "orders"}
-    assert wm["events"] == load_table(spark, sf_dir, "events").agg(F.max("ts")).collect()[0][0]
+    assert wm["events"] == load_table(spark, sf_dir, "events").agg(F.max("ts").cast("string")).first()[0]
     vecs = spark.read.parquet(os.path.join(store, "vectors"))
     assert vecs.filter(F.col("metadata.source") == "events").count() == 10  # 1000 rows / 100-chunk
 

@@ -488,6 +488,52 @@ def test_vector_store_committed_upsert_visible_to_ivf(spark, tmp_path, monkeypat
     assert sum(store.stats(include_cells=True)["cells"].values()) == 21
 
 
+def test_vector_store_bucket_regrow_keeps_side_state(spark, tmp_path, monkeypatch):
+    """A bucket regrow swaps the whole root directory; the store's
+    side state (version sequence, IVF centroids, namespace tables)
+    must survive it. Without it the next upsert restarts at version 1
+    and loses to the stale row, ivf search needs a rebuild, and the
+    namespaces vanish."""
+    import functools
+
+    import numpy as np
+
+    from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.sources import (
+        vector_store as vs_mod,
+    )
+    from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.sources.sinks import (
+        _read_marker,
+    )
+    from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.sources.vector_store import (
+        VectorStore,
+    )
+
+    dim = 4
+    vecs = np.random.RandomState(3).randn(40, dim)
+    path = str(tmp_path / "regrow_idx")
+    store = VectorStore(spark, path, dim=dim)
+    store.upsert([{"id": f"v{i}", "values": [float(x) for x in vecs[i]]} for i in range(40)])
+    store.upsert([{"id": "n0", "values": [1.0] * dim}], namespace="ns")
+    store.build_ivf(k=2, iters=1)
+    assert _read_marker(path)[0] == 16
+
+    # 40 rows over 16 buckets is past 2 x 1 row per bucket: this
+    # upsert's merge finishes with a regrow to 64 buckets
+    with monkeypatch.context() as m:
+        m.setattr(vs_mod, "upsert_parquet_partitioned",
+                  functools.partial(vs_mod.upsert_parquet_partitioned, target_bucket_rows=1))
+        store.upsert([{"id": "v1", "values": [0.5] * dim}])
+    assert _read_marker(path)[0] == 64
+
+    store.upsert([{"id": "v1", "values": [2.0] * dim}])
+    assert [float(x) for x in store.fetch(["v1"]).first()["values"]] == [2.0] * dim
+    assert store.namespaces() == ["", "ns"]
+    assert store.fetch(["n0"], namespace="ns").count() == 1
+    q = [float(x) for x in vecs[7]]
+    assert store.query(q, top_k=1, mode="ivf", n_probe=2).first()["id"] == "v7"
+    assert store.stats()["count"] == 40
+
+
 def _ivf_probe_kind(df):
     """'table' when the probe pushes the table's `_cell` column into
     the scan, 'none' when no `_cell` filter reaches it (the exact-scan
