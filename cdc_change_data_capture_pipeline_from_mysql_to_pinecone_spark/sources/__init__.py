@@ -16,7 +16,6 @@ from .tables import (
     table_rows,
     write_bucketed,
 )
-from .vector_sink import foreach_batch_vector_upsert, iter_batches, send_with_retry
 
 __all__ = [
     "TABLES",
@@ -33,7 +32,4 @@ __all__ = [
     "write_partitioned",
     "compact_parquet",
     "recover_table",
-    "foreach_batch_vector_upsert",
-    "iter_batches",
-    "send_with_retry",
 ]

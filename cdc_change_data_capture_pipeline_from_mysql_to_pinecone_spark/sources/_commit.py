@@ -1,9 +1,11 @@
 """The commit primitive for plain-parquet keyed tables.
 
 Everything that makes the engine's tables crash-safe funnels through
-this module: atomic single-file writes (marker, version sequence,
-schema), the rename-aside directory swap, post-crash restore, and a
-table-scoped writer lock.
+this module: atomic single-file writes (a keyed table's
+``_table.json`` state, a store's watermarks), the rename-aside
+directory swap, post-crash restore, and a table-scoped writer lock.
+There is no reader lock: every decision a reader makes from metadata
+reads one atomically replaced file.
 
 CONTRACT — read before pointing this at production storage:
 
@@ -16,7 +18,7 @@ CONTRACT — read before pointing this at production storage:
   machines there is no lock, and coordination is the caller's job.
 * **POSIX rename atomicity.** ``os.replace`` / ``os.rename`` are
   atomic on a local filesystem (and NFS in practice), which is what
-  makes the marker write and the directory swap crash-safe. Object
+  makes the state-file write and the directory swap crash-safe. Object
   stores (S3/GCS) do NOT have atomic rename — on such storage this
   protocol does not hold, and the same call sites should target a
   transactional table format (Delta/Iceberg MERGE) whose commit
@@ -25,7 +27,7 @@ CONTRACT — read before pointing this at production storage:
   swap is a backend change, not a rewrite.
 
 Readers never need the lock: Spark's file listing ignores the
-underscore-prefixed tmp/aside/marker names, so a reader sees either
+underscore-prefixed tmp/aside/state names, so a reader sees either
 the pre-swap or post-swap committed directory, never a mix of live
 and in-flight files within one bucket.
 """
@@ -48,7 +50,7 @@ def atomic_write_file(path: str, text: str) -> None:
     fsync'd before the rename and the parent directory after it, so
     the guarantee holds across power loss too — without the fsyncs the
     kernel may persist the rename before the data blocks, leaving a
-    zero-length marker (ADVICE r6)."""
+    zero-length state file (ADVICE r6)."""
     os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
     tmp = path + f".tmp-{uuid.uuid4().hex[:8]}"
     with open(tmp, "w") as fh:
@@ -136,30 +138,6 @@ def table_lock(path: str):
     fd = os.open(lock_path, os.O_CREAT | os.O_RDWR, 0o644)
     try:
         fcntl.flock(fd, fcntl.LOCK_EX)
-        yield
-    finally:
-        fcntl.flock(fd, fcntl.LOCK_UN)
-        os.close(fd)
-
-
-@contextmanager
-def table_lock_shared(path: str):
-    """Shared (reader) counterpart of :func:`table_lock` (blocking).
-
-    Held for SHORT, driver-side-only spans — e.g. snapshotting a gate's
-    marker/version files together (ADVICE r8: a lock-free multi-file
-    gate read is a check-then-act window against a writer's
-    multi-commit sequence). While held, no writer can be mid-commit
-    (writers hold the exclusive lock for their whole read-merge-swap
-    span), so the files read under it are one committed state. It must
-    NOT be held across job execution: reads stay lock-free by contract
-    (module docstring of vector_store), and a job-length shared lock
-    would starve writers."""
-    lock_path = path.rstrip("/") + ".lockfile"
-    os.makedirs(os.path.dirname(lock_path) or ".", exist_ok=True)
-    fd = os.open(lock_path, os.O_CREAT | os.O_RDWR, 0o644)
-    try:
-        fcntl.flock(fd, fcntl.LOCK_SH)
         yield
     finally:
         fcntl.flock(fd, fcntl.LOCK_UN)

@@ -22,10 +22,11 @@ surface over the engine's machinery, so "switching" is literal:
   the index).
 
 Semantics: upsert is last-CALL-wins per id — each call stamps a
-monotonically increasing store version (persisted in a ``_verseq``
-marker next to the table), so replaying an upsert batch is idempotent
-and two sequential calls resolve to the later one, matching the
-reference index's overwrite-by-id behavior.
+monotonically increasing store version (reserved in the table's
+``_table.json`` state, :func:`.sinks.read_table_state`, before any
+bucket swap), so replaying an upsert batch is idempotent and two
+sequential calls resolve to the later one, matching the reference
+index's overwrite-by-id behavior.
 
 Concurrency: every mutating call (upsert/delete) holds the table's
 writer lock (:func:`.._commit.table_lock`) for its WHOLE
@@ -42,16 +43,16 @@ query that overlaps a writer may execute against the state from just
 before OR just after that writer's swap (per bucket, for multi-bucket
 commits: each bucket is some committed version ≥ the query's start).
 This is the same regular-reader semantics an object-store parquet
-table has. The one multi-file decision — query(mode='ivf')'s fast-path
-gate — reads its two files (the rebuild-pending marker and the
-centroids) under a short SHARED flock so the gate itself judges one
-committed state; either branch it picks is then correct against
-concurrent swaps (the `_cell` probe because upsert/delete keep each
-row's `_cell` stamped under the committed quantizer, in the same
-bucket swap as the row, with the pending marker covering build_ivf's
-re-stamp window; the fallback because it is an exact scan). The row's
-``_cell`` is the ONLY IVF assignment — there is no second table to
-keep in step with it. Readers needing stricter
+table has. query(mode='ivf')'s fast-path gate reads ONE file, the
+table state, which build_ivf replaces in a single atomic step with
+its new centroids and ``pending`` set; the gate therefore judges one
+committed state without a lock, and either branch it picks is then
+correct against concurrent swaps (the `_cell` probe because
+upsert/delete keep each row's `_cell` stamped under the committed
+quantizer, in the same bucket swap as the row, with ``pending``
+covering build_ivf's re-stamp window; the fallback because it is an
+exact scan). The row's ``_cell`` is the ONLY IVF assignment — there is
+no second table to keep in step with it. Readers needing stricter
 read-your-own-write isolation hold :func:`.._commit.table_lock`
 around query + materialization, or back the store with a
 transactional table format.
@@ -59,25 +60,22 @@ transactional table format.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import vectors as vec_ops
-from ._commit import atomic_write_file, table_lock, table_lock_shared
+from ._commit import table_lock
 from .sinks import (
-    _observed_bucket_ids,
-    _read_marker,
-    _read_marker_schema,
+    _bucket_ids,
     delete_keys,
     read_keyed_table,
+    read_table_state,
     recover_table,
     upsert_parquet_partitioned,
+    write_table_state,
 )
-
-_VERSEQ = "_verseq"
 
 
 class VectorStore:
@@ -88,8 +86,8 @@ class VectorStore:
     each namespace is its own independent keyed table in a hidden
     ``_ns-<name>`` subdirectory (underscore prefix: invisible to the
     root table's Spark file listing, so the DEFAULT namespace — the
-    root — reads unchanged). Versions, locks, schema, and bucket
-    layout are all per-namespace; cross-namespace ids never collide,
+    root — reads unchanged). Table state, locks and bucket layout are
+    all per-namespace; cross-namespace ids never collide,
     matching the hosted-store contract.
 
     A bucket regrow of the root swaps the whole root directory, with
@@ -116,36 +114,28 @@ class VectorStore:
 
     def namespaces(self) -> list[str]:
         """Namespaces with data ('' for the root, when present)."""
-        out = [""] if _observed_bucket_ids(self.path, "kbucket") else []
+        out = [""] if _bucket_ids(self.path) else []
         if os.path.isdir(self.path):
             for d in sorted(os.listdir(self.path)):
-                if d.startswith("_ns-") and _observed_bucket_ids(
-                    os.path.join(self.path, d), "kbucket"
-                ):
+                if d.startswith("_ns-") and _bucket_ids(os.path.join(self.path, d)):
                     out.append(d[len("_ns-"):])
         return out
 
     # -- write path --------------------------------------------------
 
-    def _next_version(self, table_path: str) -> int:
-        """Read-increment-replace of the ``_verseq`` file. NOT safe to
-        call outside the table's writer lock: unsynchronized callers
-        can read the same ``last`` and stamp the same version, making
-        last-call-wins nondeterministic (max_by tie). Both call sites
-        (upsert, build_ivf) hold :func:`table_lock` around the stamp
-        AND the merge it versions. The write itself is atomic
-        (tmp+replace): a crash inside a truncating open would zero the
-        sequence and every later upsert would stamp versions BELOW the
-        stored rows' — max_by would then silently keep stale data
-        forever."""
-        seq_path = os.path.join(table_path, _VERSEQ)
-        last = 0
-        if os.path.exists(seq_path):
-            with open(seq_path) as fh:
-                last = int(fh.read().strip() or 0)
-        nxt = last + 1
-        atomic_write_file(seq_path, str(nxt))
-        return nxt
+    def _reserve_version(self, table_path: str, **changes) -> dict:
+        """Bump the table state's ``version`` (with ``changes``) in one
+        atomic write and return the new state. Durable BEFORE any
+        bucket swap: a crashed upsert's rows that did land then carry a
+        version no later call reuses, so they can never tie a later
+        stamp in max_by. NOT safe outside the table's writer lock:
+        unsynchronized callers could read the same version and stamp
+        the same one. Both call sites (upsert, build_ivf) hold
+        :func:`table_lock` around the stamp AND the merge it versions."""
+        st = read_table_state(table_path)
+        st.update(changes, version=st["version"] + 1)
+        write_table_state(table_path, st)
+        return st
 
     def upsert(self, records: DataFrame | list[dict], namespace: str = "") -> int:
         """MERGE records (``id``, ``values``, optional extra columns
@@ -167,15 +157,14 @@ class VectorStore:
             # its committed rows, then a later read's recover would
             # delete the aside)
             recover_table(tpath)
-            self._persist_schema(records, tpath)
-            ver = self._next_version(tpath)
-            stamped = records.withColumn("_ver", F.lit(ver))
+            st = self._reserve_version(tpath)
+            stamped = records.withColumn("_ver", F.lit(st["version"]))
             # maintained IVF (r8): the cell rides the ROW — assigned
             # here from the committed centroids and merged atomically
             # with the data, then used as the bucket files' cluster
             # key so query(mode='ivf')'s `_cell IN (probe)` predicate
             # prunes row groups instead of decoding every vector
-            cents = self._ivf_centroids(tpath)
+            cents = st["centroids"]
             if cents is not None:
                 stamped = vec_ops.ivf_assign(
                     stamped.drop("_cell"), "id", "values", cents
@@ -215,28 +204,6 @@ class VectorStore:
 
     # -- maintained IVF index ------------------------------------------
 
-    def _rebuild_pending_path(self, table_path: str) -> str:
-        """Marker that build_ivf has committed (or is about to commit)
-        new centroids while the rows may still carry cells from the OLD
-        quantizer. Written before the centroids and removed only after
-        the re-stamp commits, so the `_cell` probe stays OFF (exact-scan
-        fallback) across the whole window and after any crash inside
-        it, until a build completes cleanly."""
-        return os.path.join(table_path, "_ivf-rebuild-pending")
-
-    def _centroids_path(self, table_path: str) -> str:
-        # underscore prefix: invisible to the table's Spark file listing
-        return os.path.join(table_path, "_ivf_centroids.json")
-
-    def _ivf_centroids(self, table_path: str) -> list[tuple[int, list[float]]] | None:
-        """The trained quantizer, or None when no index was built."""
-        try:
-            with open(self._centroids_path(table_path)) as fh:
-                raw = json.load(fh)
-        except FileNotFoundError:
-            return None
-        return [(int(c), [float(x) for x in v]) for c, v in raw]
-
     def build_ivf(self, k: int = 8, iters: int = 2, namespace: str = "") -> int:
         """Train the IVF coarse quantizer on the CURRENT corpus and
         REWRITE the table with the assigned ``_cell`` on every row,
@@ -249,9 +216,9 @@ class VectorStore:
         cell-clustered row groups, so the probe's I/O — not just its
         compute — is ~n_probe/k of the vector bytes. The O(table)
         rewrite is the build's cost, same class as the k-means training
-        scans it already pays. The state on disk is
-        ``_ivf_centroids.json`` plus the rebuild-pending marker while a
-        build is in flight. Returns the table's committed row count."""
+        scans it already pays. The index lives in the table state: the
+        centroids, plus ``pending`` while a build is in flight. Returns
+        the table's committed row count."""
         tpath = self._at(namespace)
         with table_lock(tpath):
             recover_table(tpath)
@@ -267,70 +234,46 @@ class VectorStore:
             # one re-stamp version for the whole rebuild: re-upserted
             # rows must WIN the last-writer-wins merge against their
             # current images (an equal-version tie would be
-            # nondeterministic)
-            ver = self._next_version(tpath)
-            # the centroids and the row re-stamp are two commits — flag
-            # the window (see _rebuild_pending_path): any crash inside
-            # it leaves the marker, disabling the `_cell` probe until a
-            # build completes cleanly
-            atomic_write_file(self._rebuild_pending_path(tpath), str(ver))
-            atomic_write_file(
-                self._centroids_path(tpath), json.dumps([[c, v] for c, v in cents])
+            # nondeterministic). The new centroids land with `pending`
+            # in the same atomic write, and `pending` is cleared only
+            # after the re-stamp commits: until then rows may carry
+            # cells of the old quantizer, so the `_cell` probe stays
+            # off (exact-scan fallback) across the window and after any
+            # crash inside it
+            st = self._reserve_version(
+                tpath, centroids=[[c, v] for c, v in cents], pending=True
             )
             restamped = (
                 vec_ops.ivf_assign(
                     t.drop("kbucket", "_ver", "_cell"), "id", "values", cents
                 )
                 .withColumnRenamed("cell", "_cell")
-                .withColumn("_ver", F.lit(ver))
+                .withColumn("_ver", F.lit(st["version"]))
             )
             upsert_parquet_partitioned(
                 self.spark, tpath, restamped, ["id"], "_ver",
                 cluster_cols=["_cell"],
             )
-            os.remove(self._rebuild_pending_path(tpath))
-            return _read_marker(tpath)[1]
-
-    def _schema_path(self, table_path: str) -> str:
-        return os.path.join(table_path, "_schema.ddl")
-
-    def _persist_schema(self, records: DataFrame, table_path: str) -> None:
-        """Remember the record schema (underscore file, invisible to
-        Spark) so a store whose every row was deleted still reads as
-        an EMPTY frame instead of failing parquet schema inference."""
-        ddl_path = self._schema_path(table_path)
-        if not os.path.exists(ddl_path):
-            os.makedirs(table_path, exist_ok=True)
-            import uuid
-
-            tmp = ddl_path + f".tmp-{uuid.uuid4().hex[:8]}"
-            with open(tmp, "w") as fh:
-                fh.write(records.schema.json())
-            os.replace(tmp, ddl_path)
+            st = read_table_state(tpath)
+            st["pending"] = False
+            write_table_state(tpath, st)
+            return st["rows"]
 
     # -- read path ---------------------------------------------------
 
     def _table(self, namespace: str = "") -> DataFrame:
         tpath = self._at(namespace)
         recover_table(tpath)
-        if not _observed_bucket_ids(tpath, "kbucket"):
+        if not _bucket_ids(tpath):
             # every row deleted (or nothing upserted yet): an empty
-            # store reads as an empty frame, never a parquet
-            # schema-inference failure. The marker's canonical schema
-            # is authoritative (it tracks evolution — review fix: the
-            # once-written _schema.ddl goes stale after a new column
-            # arrives); the ddl file is the pre-first-delete fallback.
+            # store reads as an empty frame under the state's canonical
+            # schema, never a parquet schema-inference failure
             from pyspark.sql.types import IntegerType, StructType
 
-            marker_schema = _read_marker_schema(tpath)
-            if marker_schema is not None:
-                return self.spark.createDataFrame([], marker_schema)
-            if os.path.exists(self._schema_path(tpath)):
-                with open(self._schema_path(tpath)) as fh:
-                    schema = StructType.fromJson(json.load(fh))
-            else:
-                schema = StructType()
-            schema = schema.add("_ver", "long").add("kbucket", IntegerType())
+            schema = read_table_state(tpath)["schema"]
+            if schema is not None:
+                return self.spark.createDataFrame([], StructType.fromJson(schema))
+            schema = StructType().add("_ver", "long").add("kbucket", IntegerType())
             return self.spark.createDataFrame([], schema)
         # canonical-schema read: records upserted after a schema
         # evolution (new metadata columns) read correctly against
@@ -343,17 +286,15 @@ class VectorStore:
         """The ``n_probe`` cells nearest ``vector`` under the committed
         quantizer, or None when a rebuild is pending (the rows' cells
         may come from another quantizer, so only an exact scan is
-        safe). The marker and the centroids are read together under a
-        short SHARED lock, so no build is mid-commit between the two
-        reads; the lock is released before any job runs (reads stay
-        lock-free by contract, module docstring "Read consistency")."""
-        tpath = self._at(namespace)
-        with table_lock_shared(tpath):
-            pending = os.path.exists(self._rebuild_pending_path(tpath))
-            cents = self._ivf_centroids(tpath)
+        safe). The centroids and ``pending`` come from one read of the
+        table state, which build_ivf replaces in one atomic step, so
+        the gate judges one committed state without a lock (module
+        docstring "Read consistency")."""
+        st = read_table_state(self._at(namespace))
+        cents = st["centroids"]
         if cents is None:
             raise ValueError("mode='ivf' needs build_ivf() first")
-        if pending or "_cell" not in t.columns:
+        if st["pending"] or "_cell" not in t.columns:
             return None
         ranked = sorted(
             ((sum(x * y for x, y in zip(vector, cv)), cid) for cid, cv in cents),
@@ -469,7 +410,7 @@ class VectorStore:
         semi-join instead of a literal IN list (plan size stays O(1);
         bucket pruning still applies — the distinct bucket set is at
         most the table's bucket count regardless of batch size)."""
-        n, _rows = _read_marker(self._at(namespace))
+        n = read_table_state(self._at(namespace))["buckets"]
         t = self._table(namespace)
         if not ids:
             return t.limit(0).drop("kbucket", "_ver", "_cell")
@@ -491,7 +432,7 @@ class VectorStore:
         return t.drop("kbucket", "_ver", "_cell")
 
     def stats(self, namespace: str = "", include_cells: bool = False) -> dict:
-        """Index statistics from the table markers (no scan). With the
+        """Index statistics from the table state (no scan). With the
         default namespace, includes the per-namespace breakdown — the
         describe_index_stats shape of the hosted API.
 
@@ -501,9 +442,8 @@ class VectorStore:
         never the vector column. The counts are the rows' own
         assignments, so they are exactly what an ivf probe filters on;
         while a rebuild is pending they may mix two quantizers."""
-        tpath = self._at(namespace)
-        n, rows = _read_marker(tpath)
-        out = {"count": rows or 0, "num_buckets": n or 0, "dim": self.dim}
+        st = read_table_state(self._at(namespace))
+        out = {"count": st["rows"], "num_buckets": st["buckets"], "dim": self.dim}
         if include_cells:
             t = self._table(namespace)
             if "_cell" in t.columns:
@@ -512,12 +452,8 @@ class VectorStore:
                     for r in t.groupBy("_cell").agg(F.count(F.lit(1)).alias("n")).collect()
                 }
         if not namespace:
-            nss = {}
-            for ns in self.namespaces():
-                if ns:
-                    _n2, r2 = _read_marker(self._at(ns))
-                    nss[ns] = {"count": r2 or 0}
-                else:
-                    nss[ns] = {"count": rows or 0}
-            out["namespaces"] = nss
+            out["namespaces"] = {
+                ns: {"count": read_table_state(self._at(ns))["rows"]}
+                for ns in self.namespaces()
+            }
         return out

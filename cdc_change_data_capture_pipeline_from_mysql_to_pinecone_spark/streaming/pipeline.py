@@ -425,13 +425,13 @@ def _commit_rollup(rollup_path: str, new_state, watermark: str) -> None:
     it reads back exactly under any host time zone."""
     import uuid as _uuid
 
-    from ..sources.sinks import _swap_in
+    from ..sources._commit import swap_in
 
     tmp = f"{rollup_path}.tmp-{_uuid.uuid4().hex[:8]}"
     new_state.write.mode("overwrite").parquet(tmp)
     with open(os.path.join(tmp, "_watermark"), "w") as fh:
         fh.write(watermark)
-    _swap_in(rollup_path, tmp)
+    swap_in(rollup_path, tmp)
 
 
 def sweep_changelog_rollup(

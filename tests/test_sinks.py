@@ -12,6 +12,10 @@ from pyspark.sql import functions as F
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.sources import upsert_parquet  # noqa: E402
+from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.sources.sinks import (  # noqa: E402
+    read_table_state,
+    write_table_state,
+)
 
 
 def test_upsert_last_writer_wins(spark, tmp_path):
@@ -188,7 +192,7 @@ def test_partitioned_upsert_replay_idempotent(spark, tmp_path):
 def test_partitioned_upsert_bucket_sizing(spark, tmp_path):
     """Bucket count is a table property derived from size: created from
     the first batch (rows/target, pow2, min 16), persisted in the
-    _nbuckets marker, enforced against conflicting explicit counts, and
+    table state, enforced against conflicting explicit counts, and
     doubled by a re-bucketing rewrite when the table outgrows
     2x target rows/bucket — a fixed count would mean ~6 TB buckets at
     100 TB (VERDICT r3)."""
@@ -196,10 +200,6 @@ def test_partitioned_upsert_bucket_sizing(spark, tmp_path):
 
     from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.sources import (
         upsert_parquet_partitioned,
-    )
-    from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.sources.sinks import (
-        _read_marker,
-        _read_nbuckets,
     )
 
     path = str(tmp_path / "vectors")
@@ -211,7 +211,7 @@ def test_partitioned_upsert_bucket_sizing(spark, tmp_path):
     upsert_parquet_partitioned(
         spark, path, mk(0, 100, 1), ["id"], "version", target_bucket_rows=2
     )
-    assert _read_nbuckets(path, "kbucket") == 64
+    assert read_table_state(path)["buckets"] == 64
     # conflicting explicit count must refuse, not corrupt the mapping
     with pytest.raises(ValueError):
         upsert_parquet_partitioned(
@@ -221,13 +221,13 @@ def test_partitioned_upsert_bucket_sizing(spark, tmp_path):
     upsert_parquet_partitioned(
         spark, path, mk(100, 300, 1), ["id"], "version", target_bucket_rows=2
     )
-    n2 = _read_nbuckets(path, "kbucket")
+    n2 = read_table_state(path)["buckets"]
     assert n2 >= 128, n2  # grew
     df = spark.read.parquet(path)
-    # ids from both merges survive the rewrite, and the marker's row
+    # ids from both merges survive the rewrite, and the state's row
     # count with them
     assert {r["id"] for r in df.select("id").collect()} == {f"id{i}" for i in range(300)}
-    assert _read_marker(path) == (n2, 300)
+    assert read_table_state(path)["rows"] == 300
     assert df.filter(F.col("id") == "id250").first()["score"] == 250.0
     # the re-bucketed layout is consistent: every row's partition
     # matches the hash of its key under the new count
@@ -350,11 +350,7 @@ def test_recover_table_after_crash_mid_regrow(spark, tmp_path):
     df = spark.read.parquet(path)
     assert df.count() == 32
     # committed bucket count survives the recovery
-    from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.sources.sinks import (
-        _read_nbuckets,
-    )
-
-    assert _read_nbuckets(path, "kbucket") == 8
+    assert read_table_state(path)["buckets"] == 8
 
 
 def test_partitioned_upsert_sequence_equivalence(spark, tmp_path):
@@ -388,57 +384,11 @@ def test_partitioned_upsert_sequence_equivalence(spark, tmp_path):
     assert got == expect
 
 
-def test_partitioned_upsert_markerless_explicit_count(spark, tmp_path):
-    """Regression (ADVICE r4, medium): for a marker-less legacy table
-    an explicit ``num_buckets`` is authoritative — the pow2 inference
-    cannot reconstruct a non-power-of-two creation count, and trusting
-    it would scatter keys across mismatched buckets. The trusted count
-    is validated against the observed bucket ids and persisted."""
-    import pytest
-
-    from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.sources import (
-        upsert_parquet_partitioned,
-    )
-    from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.sources.sinks import (
-        _nbuckets_marker,
-        _read_nbuckets,
-    )
-
-    path = str(tmp_path / "vectors")
-    mk = lambda lo, hi, v: spark.createDataFrame(  # noqa: E731
-        [(f"id{i}", float(i), v) for i in range(lo, hi)],
-        "id string, score double, version int",
-    )
-    # created with a non-power-of-two explicit count, marker then lost
-    upsert_parquet_partitioned(spark, path, mk(0, 60, 1), ["id"], "version", num_buckets=6)
-    os.remove(_nbuckets_marker(path))
-
-    # wrong explicit count (an observed id is out of range): refuse
-    with pytest.raises(ValueError):
-        upsert_parquet_partitioned(spark, path, mk(0, 1, 2), ["id"], "version", num_buckets=4)
-
-    # correct explicit count: trusted over the pow2 inference (which
-    # would say 8), persisted, and the merge lands keys in their
-    # original buckets — no key ends up split across two buckets
-    upsert_parquet_partitioned(spark, path, mk(0, 30, 2), ["id"], "version", num_buckets=6)
-    assert _read_nbuckets(path, "kbucket") == 6
-    df = spark.read.parquet(path)
-    assert df.count() == 60  # updates merged, not duplicated
-    assert df.filter(F.col("id") == "id10").first()["version"] == 2
-    spread = (
-        df.groupBy("id")
-        .agg(F.countDistinct("kbucket").alias("nb"))
-        .agg(F.max("nb"))
-        .collect()[0][0]
-    )
-    assert spread == 1
-
-
 def test_partitioned_upsert_rows_maintained_incrementally(spark, tmp_path, monkeypatch):
     """Regression (VERDICT r4 defect 1): on the steady path the merge
     must not walk the whole table for the regrow decision — footer
     reads touch ONLY the touched bucket directories, and the committed
-    row count is carried in the marker."""
+    row count is carried in the table state."""
     from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.sources import (
         upsert_parquet_partitioned,
     )
@@ -450,7 +400,8 @@ def test_partitioned_upsert_rows_maintained_incrementally(spark, tmp_path, monke
         "id string, score double, version int",
     )
     upsert_parquet_partitioned(spark, path, mk(0, 50, 1), ["id"], "version", num_buckets=8)
-    assert sinks._read_marker(path) == (8, 50)
+    st = read_table_state(path)
+    assert (st["buckets"], st["rows"]) == (8, 50)
 
     walked = []
     real = sinks._footer_rows
@@ -463,46 +414,20 @@ def test_partitioned_upsert_rows_maintained_incrementally(spark, tmp_path, monke
     upsert_parquet_partitioned(spark, path, mk(40, 70, 2), ["id"], "version")
     assert walked, "row accounting should footer-read the touched buckets"
     assert all(os.path.basename(p).startswith("kbucket=") for p in walked), walked
-    assert sinks._read_marker(path) == (8, 70)
+    st = read_table_state(path)
+    assert (st["buckets"], st["rows"]) == (8, 70)
     assert spark.read.parquet(path).count() == 70
 
 
-def test_partitioned_upsert_legacy_bare_int_marker(spark, tmp_path):
-    """A pre-rows marker (bare int) keeps working: one full-table walk
-    re-establishes the count, after which the marker is upgraded to the
-    JSON form and the steady path is incremental again."""
-    from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.sources import (
-        upsert_parquet_partitioned,
-    )
-    from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.sources import sinks
-
-    path = str(tmp_path / "vectors")
-    mk = lambda lo, hi, v: spark.createDataFrame(  # noqa: E731
-        [(f"id{i}", float(i), v) for i in range(lo, hi)],
-        "id string, score double, version int",
-    )
-    upsert_parquet_partitioned(spark, path, mk(0, 50, 1), ["id"], "version", num_buckets=8)
-    with open(sinks._nbuckets_marker(path), "w") as fh:
-        fh.write("8")  # legacy format
-    assert sinks._read_marker(path) == (8, None)
-
-    upsert_parquet_partitioned(spark, path, mk(0, 10, 2), ["id"], "version")
-    assert sinks._read_marker(path) == (8, 50)
-    assert spark.read.parquet(path).filter(F.col("id") == "id3").first()["version"] == 2
-
-
 def test_partitioned_upsert_marker_drift_self_heals(spark, tmp_path):
-    """The marker row count is advisory: a crash between bucket swaps
-    and the marker write leaves it stale. An overcounted marker that
+    """The state's row count is advisory: a crash between bucket swaps
+    and the final state write leaves it stale. An overcount that
     crosses the regrow threshold must be corrected by the
     authoritative footer walk (and re-synced) WITHOUT triggering a
     spurious O(table) rewrite."""
-    import json as _json
-
     from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.sources import (
         upsert_parquet_partitioned,
     )
-    from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.sources import sinks
 
     path = str(tmp_path / "vectors")
     mk = lambda lo, hi, v: spark.createDataFrame(  # noqa: E731
@@ -512,24 +437,24 @@ def test_partitioned_upsert_marker_drift_self_heals(spark, tmp_path):
     upsert_parquet_partitioned(
         spark, path, mk(0, 40, 1), ["id"], "version", num_buckets=8, target_bucket_rows=100
     )
-    assert sinks._read_marker(path) == (8, 40)
+    st = read_table_state(path)
+    assert (st["buckets"], st["rows"]) == (8, 40)
     # simulate stale overcount far past the threshold (2*100*8 = 1600)
-    with open(sinks._nbuckets_marker(path), "w") as fh:
-        fh.write(_json.dumps({"n": 8, "rows": 5000}))
+    write_table_state(path, {**st, "rows": 5000})
     upsert_parquet_partitioned(
         spark, path, mk(0, 5, 2), ["id"], "version", target_bucket_rows=100
     )
-    n, rows = sinks._read_marker(path)
-    assert n == 8, "spurious regrow from a drifted marker"
-    assert rows == 40, "walk should re-sync the drifted count"
+    st = read_table_state(path)
+    assert st["buckets"] == 8, "spurious regrow from a drifted row count"
+    assert st["rows"] == 40, "walk should re-sync the drifted count"
 
 
 def test_upsert_schema_evolution_new_column(spark, tmp_path):
     """CDC schema drift (the reference's ALTER TABLE blind spot): a
     batch carrying a NEW column merges cleanly — old rows read NULL
-    for it even from untouched buckets (canonical marker schema), a
+    for it even from untouched buckets (canonical state schema), a
     batch MISSING a column leaves NULLs for its new rows, and the
-    evolved schema survives delete + regrow marker rewrites."""
+    evolved schema survives a delete's state rewrite."""
     from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.sources.sinks import (
         delete_keys,
         read_keyed_table,
@@ -562,7 +487,7 @@ def test_upsert_schema_evolution_new_column(spark, tmp_path):
     t2 = {r["id"]: (r["val"], r["lang"]) for r in read_keyed_table(spark, path).collect()}
     assert t2[3] == ("v3c", None) and t2[1] == ("v1b", "en")
 
-    # schema survives a delete's marker rewrite
+    # schema survives a delete's state rewrite
     delete_keys(spark, path, spark.createDataFrame([(5,)], ["id"]), ["id"])
     t3 = read_keyed_table(spark, path)
     assert "lang" in t3.columns and t3.count() == 39

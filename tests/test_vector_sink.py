@@ -1,140 +1,20 @@
-"""Vector-index connector contract (S8 as a pluggable sink): batching,
-retry-with-backoff, partition parallelism, streaming integration.
-Fakes are filesystem-backed — foreachPartition bodies run in separate
-Python worker processes, so in-memory fakes would observe nothing."""
+"""VectorStore: the Pinecone-shaped index API over the keyed bucketed
+table — upsert/fetch/query/delete, namespaces, the maintained IVF
+index, and the crash windows of its commits (commit-then-raise
+injection around the commit functions)."""
 
 from __future__ import annotations
 
-import json
 import os
 import sys
-import uuid
 
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.sources.vector_sink import (  # noqa: E402
-    foreach_batch_vector_upsert,
-    iter_batches,
-    send_with_retry,
+from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.sources.sinks import (  # noqa: E402
+    read_table_state,
 )
-
-
-def _dir_upsert(out_dir: str, fail_first: bool = False):
-    """An upsert callable recording each delivered batch as one JSON
-    file; optionally fails the first attempt per batch (transient
-    error injection via marker files)."""
-
-    def upsert(batch: list[dict]) -> None:
-        key = "-".join(str(r["id"]) for r in batch)
-        marker = os.path.join(out_dir, f".tried-{abs(hash(key))}")
-        if fail_first and not os.path.exists(marker):
-            open(marker, "w").close()
-            raise ConnectionError("transient index error")
-        name = f"batch-{uuid.uuid4().hex[:12]}.json"
-        with open(os.path.join(out_dir, name), "w") as fh:
-            json.dump(batch, fh)
-
-    return upsert
-
-
-def test_iter_batches_shapes():
-    batches = list(iter_batches(iter(range(25)), 10))
-    assert [len(b) for b in batches] == [10, 10, 5]
-    assert list(iter_batches(iter([]), 10)) == []
-
-
-def test_send_with_retry_gives_up():
-    calls = []
-
-    def always_fails(batch):
-        calls.append(1)
-        raise TimeoutError("down")
-
-    with pytest.raises(TimeoutError):
-        send_with_retry(always_fails, [{"id": 1}], max_retries=3, backoff_seconds=0.001)
-    assert len(calls) == 3
-
-
-def test_foreach_batch_delivers_all_rows_in_reference_batches(spark, tmp_path):
-    out = str(tmp_path / "index")
-    os.makedirs(out)
-    df = spark.createDataFrame(
-        [(f"doc#{i}", [float(i), 0.5], {"source": "documents"}) for i in range(57)],
-        "id string, values array<double>, metadata map<string,string>",
-    ).repartition(4)
-    foreach_batch_vector_upsert(df, epoch_id=0, upsert=_dir_upsert(out), batch_size=10)
-
-    batches = [
-        json.load(open(os.path.join(out, f))) for f in os.listdir(out) if f.endswith(".json")
-    ]
-    ids = sorted(r["id"] for b in batches for r in b)
-    assert ids == sorted(f"doc#{i}" for i in range(57))  # nothing lost or duplicated
-    assert max(len(b) for b in batches) <= 10  # ≙ service.py:151 batch size
-    # payload shape ≙ service.py:160-166
-    sample = batches[0][0]
-    assert set(sample) == {"id", "values", "metadata"} and sample["metadata"]["source"] == "documents"
-
-
-def test_foreach_batch_retries_transient_failures(spark, tmp_path):
-    out = str(tmp_path / "index")
-    os.makedirs(out)
-    df = spark.createDataFrame(
-        [(f"doc#{i}", [1.0], {"k": "v"}) for i in range(20)],
-        "id string, values array<double>, metadata map<string,string>",
-    ).repartition(2)
-    foreach_batch_vector_upsert(
-        df, 0, _dir_upsert(out, fail_first=True), batch_size=10, backoff_seconds=0.001
-    )
-    batches = [
-        json.load(open(os.path.join(out, f))) for f in os.listdir(out) if f.endswith(".json")
-    ]
-    ids = sorted(r["id"] for b in batches for r in b)
-    assert ids == sorted(f"doc#{i}" for i in range(20))
-    assert any(f.startswith(".tried-") for f in os.listdir(out))  # failures actually happened
-
-
-def test_streaming_into_vector_connector(spark, sf_dir, tmp_path):
-    """The full reference dataflow with the pluggable sink: stream ->
-    chunk -> foreachBatch connector -> 'index' (directory fake)."""
-    from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.operators import cdc
-
-    out = str(tmp_path / "index")
-    os.makedirs(out)
-    path = os.path.join(sf_dir, "events.parquet")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(path).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    upsert = _dir_upsert(out)
-
-    def process(batch_df, eid):
-        from pyspark.sql import functions as F
-
-        serialized = cdc.serialize_rows(batch_df.drop("ts"))
-        chunks = cdc.chunk_documents(
-            serialized, "event_id", "data_string", "events", bucket_width=100_000
-        )
-        payload = chunks.select(
-            F.col("chunk_id").alias("id"),
-            F.array(F.lit(0.0)).alias("values"),
-            F.create_map(F.lit("text"), F.col("document")).alias("metadata"),
-        )
-        foreach_batch_vector_upsert(payload, eid, upsert, batch_size=3)
-
-    q = stream.writeStream.foreachBatch(process).trigger(availableNow=True).start()
-    q.awaitTermination(120)
-
-    batches = [
-        json.load(open(os.path.join(out, f))) for f in os.listdir(out) if f.endswith(".json")
-    ]
-    ids = sorted(r["id"] for b in batches for r in b)
-    assert len(ids) == 10 and len(set(ids)) == 10  # 1000 events / 100-row chunks
-    assert all(i.startswith("events#") for i in ids)
 
 
 def test_vector_store_facade_end_to_end(spark, tmp_path):
@@ -247,8 +127,7 @@ def test_vector_store_concurrent_upserts_serialize(spark, tmp_path):
     # call fully overwrote the overlapping ids (lock around the merge)
     assert {r["_ver"] for r in rows} == {n_calls}
     assert len({r["metadata"] for r in rows}) == 1
-    with open(f"{path}/_verseq") as fh:
-        assert int(fh.read()) == n_calls
+    assert read_table_state(path)["version"] == n_calls
 
 
 def test_vector_store_schema_evolution(spark, tmp_path):
@@ -400,7 +279,7 @@ def test_vector_store_maintained_ivf(spark, tmp_path):
     assert store.build_ivf(k=4, iters=2) == 40
 
     def cells_equal_recompute():
-        cents = store._ivf_centroids(store._at(""))
+        cents = read_table_state(store._at(""))["centroids"]
         live = store._table("")
         oneshot = {r["id"]: r["cell"]
                    for r in ivf_assign(live, "id", "values", cents).collect()}
@@ -490,10 +369,24 @@ def test_vector_store_committed_upsert_visible_to_ivf(spark, tmp_path, monkeypat
 
 def test_vector_store_bucket_regrow_keeps_side_state(spark, tmp_path, monkeypatch):
     """A bucket regrow swaps the whole root directory; the store's
-    side state (version sequence, IVF centroids, namespace tables)
-    must survive it. Without it the next upsert restarts at version 1
-    and loses to the stale row, ivf search needs a rebuild, and the
-    namespaces vanish."""
+    table state (version, IVF centroids) and namespace tables must
+    survive it, and the regrown buckets must stay `_cell`-clustered.
+    Without the state the next upsert restarts at version 1 and loses
+    to the stale row, ivf search needs a rebuild, and the namespaces
+    vanish. Afterwards the table directory holds buckets, the state
+    file and the namespace entries, nothing else.
+
+    Why build_ivf runs under 3 uncoalesced shuffle partitions: the
+    bucket writes hash-partition by the same murmur3 hash of the key
+    as the bucket id, so under a power-of-two partition count each
+    bucket is written by one task as one cell-sorted file, and a
+    doubling regrow (each new bucket draws its rows from one old
+    bucket) keeps that order by accident. Under 3 partitions each of
+    the 16 buckets holds several cell-sorted files, as it does on a
+    host whose core count is not a power of two or in a bucket whose
+    file is split; the regrow then reads ~16 rows from 4 cells, in
+    several runs, into each of its 64 buckets — an unclustered rewrite
+    cannot pass the order check by chance."""
     import functools
 
     import numpy as np
@@ -501,29 +394,36 @@ def test_vector_store_bucket_regrow_keeps_side_state(spark, tmp_path, monkeypatc
     from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.sources import (
         vector_store as vs_mod,
     )
-    from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.sources.sinks import (
-        _read_marker,
-    )
     from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.sources.vector_store import (
         VectorStore,
     )
 
-    dim = 4
-    vecs = np.random.RandomState(3).randn(40, dim)
+    dim, n = 4, 1000
+    vecs = np.random.RandomState(3).randn(n, dim)
     path = str(tmp_path / "regrow_idx")
     store = VectorStore(spark, path, dim=dim)
-    store.upsert([{"id": f"v{i}", "values": [float(x) for x in vecs[i]]} for i in range(40)])
+    store.upsert([{"id": f"v{i}", "values": [float(x) for x in vecs[i]]} for i in range(n)])
     store.upsert([{"id": "n0", "values": [1.0] * dim}], namespace="ns")
-    store.build_ivf(k=2, iters=1)
-    assert _read_marker(path)[0] == 16
+    confs = {"spark.sql.shuffle.partitions": "3",
+             "spark.sql.adaptive.coalescePartitions.enabled": "false"}
+    prior = {k: spark.conf.get(k) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        store.build_ivf(k=4, iters=1)
+    finally:
+        for k, v in prior.items():
+            spark.conf.set(k, v)
+    assert read_table_state(path)["buckets"] == 16
 
-    # 40 rows over 16 buckets is past 2 x 1 row per bucket: this
+    # 1000 rows over 16 buckets is past 2 x 20 rows per bucket: this
     # upsert's merge finishes with a regrow to 64 buckets
     with monkeypatch.context() as m:
         m.setattr(vs_mod, "upsert_parquet_partitioned",
-                  functools.partial(vs_mod.upsert_parquet_partitioned, target_bucket_rows=1))
+                  functools.partial(vs_mod.upsert_parquet_partitioned, target_bucket_rows=20))
         store.upsert([{"id": "v1", "values": [0.5] * dim}])
-    assert _read_marker(path)[0] == 64
+    assert read_table_state(path)["buckets"] == 64
+    _assert_cell_sorted(path)
 
     store.upsert([{"id": "v1", "values": [2.0] * dim}])
     assert [float(x) for x in store.fetch(["v1"]).first()["values"]] == [2.0] * dim
@@ -531,7 +431,95 @@ def test_vector_store_bucket_regrow_keeps_side_state(spark, tmp_path, monkeypatc
     assert store.fetch(["n0"], namespace="ns").count() == 1
     q = [float(x) for x in vecs[7]]
     assert store.query(q, top_k=1, mode="ivf", n_probe=2).first()["id"] == "v7"
-    assert store.stats()["count"] == 40
+    assert store.stats()["count"] == n
+    store.delete(["v2"])
+    assert store.stats()["count"] == n - 1
+    assert {d for d in os.listdir(path) if not d.startswith("kbucket=")} == {
+        "_table.json", "_ns-ns", "_ns-ns.lockfile"
+    }
+
+
+def test_vector_store_first_upsert_crash_keeps_bucket_count(spark, tmp_path, monkeypatch):
+    """A new table's bucket count is in its state before the first
+    bucket lands. The first upsert crashes after its first bucket swap
+    and before its final state write; the replay, sized by default for
+    16 buckets, must hash under the recorded 64 — merging the landed
+    rows instead of duplicating them — and fetch sees every id once."""
+    import functools
+
+    from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.sources import (
+        sinks,
+    )
+    from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.sources import (
+        vector_store as vs_mod,
+    )
+    from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.sources.vector_store import (
+        VectorStore,
+    )
+
+    path = str(tmp_path / "first_idx")
+    store = VectorStore(spark, path, dim=2)
+    recs = [{"id": f"d{i}", "values": [float(i), 1.0]} for i in range(100)]
+    with monkeypatch.context() as m:
+        m.setattr(sinks, "swap_in", _commit_then_crash(sinks.swap_in))
+        m.setattr(vs_mod, "upsert_parquet_partitioned",
+                  functools.partial(vs_mod.upsert_parquet_partitioned, target_bucket_rows=2))
+        with pytest.raises(OSError):
+            store.upsert(recs)
+    assert read_table_state(path)["buckets"] == 64  # 100 rows / 2 per bucket
+    assert len([d for d in os.listdir(path) if d.startswith("kbucket=")]) == 1
+
+    recs.append({"id": "extra", "values": [0.0, 1.0]})
+    store.upsert(recs)
+    ids = [r["id"] for r in recs]
+    assert sorted(r["id"] for r in store.fetch(ids).collect()) == sorted(ids)
+    assert spark.read.parquet(path).count() == len(ids)
+    assert read_table_state(path)["buckets"] == 64
+
+
+def test_vector_store_pre_state_layout_raises(spark, tmp_path):
+    """A directory holding `kbucket=*` buckets but no `_table.json` was
+    written by the older marker-file layout. Every verb raises a
+    ValueError that names replay as the fix: no inference of the bucket
+    count, no migration."""
+    from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.sources.vector_store import (
+        VectorStore,
+    )
+
+    path = str(tmp_path / "old_idx")
+    spark.createDataFrame(
+        [("a", [1.0, 0.0], 1, 3)], "id string, values array<double>, _ver long, kbucket int"
+    ).write.partitionBy("kbucket").parquet(path)
+    with open(os.path.join(path, "_nbuckets"), "w") as fh:
+        fh.write('{"n": 16, "rows": 1}')
+    store = VectorStore(spark, path, dim=2)
+    for verb in (
+        lambda: store.upsert([{"id": "b", "values": [0.0, 1.0]}]),
+        lambda: store.delete(["a"]),
+        lambda: store.fetch(["a"]),
+        lambda: store.query([1.0, 0.0]),
+        store.stats,
+        store.build_ivf,
+    ):
+        with pytest.raises(ValueError, match="replay"):
+            verb()
+
+
+def _assert_cell_sorted(tpath):
+    """Every bucket data file under ``tpath`` holds its rows in
+    non-decreasing ``_cell`` order (read with pyarrow, not the engine)."""
+    import pyarrow.parquet as pq
+
+    n_files = 0
+    for root, dirs, files in os.walk(tpath):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        for f in files:
+            if not f.endswith(".parquet"):
+                continue
+            cells = pq.read_table(os.path.join(root, f), columns=["_cell"])["_cell"].to_pylist()
+            assert cells == sorted(cells), (f, cells[:20])
+            n_files += 1
+    assert n_files > 0
 
 
 def _ivf_probe_kind(df):
@@ -556,7 +544,6 @@ def test_vector_store_ivf_cell_clustered_probe(spark, tmp_path):
     at any future row-group count), the predicate reaches the parquet
     scan as a PushedFilter, and the probed query stays correct."""
     import numpy as np
-    import pyarrow.parquet as pq
 
     from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.operators.vectors import (
         ivf_assign,
@@ -579,27 +566,12 @@ def test_vector_store_ivf_cell_clustered_probe(spark, tmp_path):
     assert "_cell" in t.columns
     # table cells == a recompute against the committed centroids
     tbl = {r["id"]: r["_cell"] for r in t.select("id", "_cell").collect()}
-    cents = store._ivf_centroids(tpath)
+    cents = read_table_state(tpath)["centroids"]
     oneshot = {r["id"]: r["cell"]
                for r in ivf_assign(t, "id", "values", cents).collect()}
     assert tbl == oneshot and len(tbl) == 400
 
-    def assert_cell_sorted():
-        import os as _os
-        n_files = 0
-        for root, dirs, files in _os.walk(tpath):
-            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-            for f in files:
-                if not f.endswith(".parquet"):
-                    continue
-                cells = pq.read_table(
-                    _os.path.join(root, f), columns=["_cell"]
-                )["_cell"].to_pylist()
-                assert cells == sorted(cells), (f, cells[:20])
-                n_files += 1
-        assert n_files > 0
-
-    assert_cell_sorted()
+    _assert_cell_sorted(tpath)
 
     # the probe predicate reaches the scan (pushed, row-group-prunable)
     q = [float(x) for x in vecs[0]]
@@ -616,7 +588,7 @@ def test_vector_store_ivf_cell_clustered_probe(spark, tmp_path):
     ])
     t2 = store._table("")
     assert t2.filter("_cell IS NULL").count() == 0
-    assert_cell_sorted()
+    _assert_cell_sorted(tpath)
 
     # probing every cell == exact search (recall 1 sanity)
     exact = [r["id"] for r in store.query(q, top_k=5, mode="exact").collect()]
@@ -727,11 +699,10 @@ def test_vector_store_where_composes_with_ivf_fast_path(spark, tmp_path):
 def _assert_pending_rebuild_serves_exact(store, q, make_crash):
     """Crash a build_ivf through ``make_crash`` (a wrapper around
     ``upsert_parquet_partitioned``, the re-stamp commit), then check
-    the whole pending window: the marker survives an ordinary upsert,
-    ivf search pushes no `_cell` filter and equals exact search, and a
-    clean rebuild clears the marker and restores the `_cell` probe."""
-    import os as _os
-
+    the whole pending window: the table state's ``pending`` flag
+    survives an ordinary upsert, ivf search pushes no `_cell` filter and
+    equals exact search, and a clean rebuild clears the flag and
+    restores the `_cell` probe."""
     import pytest as _pytest
 
     from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.sources import (
@@ -746,12 +717,12 @@ def _assert_pending_rebuild_serves_exact(store, q, make_crash):
             store.build_ivf(k=3, iters=1)
     finally:
         vs_mod.upsert_parquet_partitioned = real
-    assert _os.path.exists(store._rebuild_pending_path(tpath))
+    assert read_table_state(tpath)["pending"]
 
     # an ordinary tick stamps its rows under the new centroids but must
-    # not clear the marker: older rows may still carry old cells
+    # not clear the flag: older rows may still carry old cells
     store.upsert([{"id": "later", "values": [0.0, 9.0, 0.0, 0.0]}])
-    assert _os.path.exists(store._rebuild_pending_path(tpath))
+    assert read_table_state(tpath)["pending"]
 
     hits = store.query(q, top_k=5, mode="ivf", n_probe=3)
     assert _ivf_probe_kind(hits) == "none"
@@ -759,7 +730,7 @@ def _assert_pending_rebuild_serves_exact(store, q, make_crash):
     assert [r["id"] for r in hits.collect()] == exact
 
     store.build_ivf(k=3, iters=1)
-    assert not _os.path.exists(store._rebuild_pending_path(tpath))
+    assert not read_table_state(tpath)["pending"]
     hits2 = store.query(q, top_k=5, mode="ivf", n_probe=3)
     assert _ivf_probe_kind(hits2) == "table"
     assert [r["id"] for r in hits2.collect()] == exact
@@ -767,9 +738,9 @@ def _assert_pending_rebuild_serves_exact(store, q, make_crash):
 
 def test_vector_store_rebuild_crash_disables_cell_fast_path(spark, tmp_path):
     """r8 self-review catch: a build_ivf crash right AFTER its row
-    re-stamp commits — before it removes the pending marker — must
-    keep the `_cell` probe off until a build completes cleanly. The
-    marker is the only record that the build did not finish."""
+    re-stamp commits — before it clears the state's `pending` flag —
+    must keep the `_cell` probe off until a build completes cleanly.
+    The flag is the only record that the build did not finish."""
     import numpy as np
 
     from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.sources.vector_store import (
@@ -855,7 +826,7 @@ def test_vector_store_rebuild_crash_before_rewrite(spark, tmp_path):
     """Completing the rebuild-crash matrix: a crash AFTER the new
     centroids are written but BEFORE the row re-stamp commits leaves
     rows on the old quantizer under new committed centroids — the
-    pending marker keeps the `_cell` probe off (exact-scan fallback)
+    `pending` flag keeps the `_cell` probe off (exact-scan fallback)
     until a clean rebuild restores it."""
     import numpy as np
 
